@@ -298,7 +298,8 @@ def interleave_bits(a, b, bits: int = 21):
 
 # ---------------------------------------------------------------------------
 # Zone maps for PLAIN sink tables (no snapshot manifest): the same per-unit
-# min/max data-skipping stats `operators/snapshots._collect_dir_stats`
+# min/max data-skipping stats that `operators/snapshots._collect_dir_pruning`
+# (the one read-back pass that builds zone maps and blooms together)
 # publishes into manifests, as a `_zone_maps.json` sidecar at the table
 # root — partition-tuple granularity for the hive-partitioned sink,
 # file granularity for the clustered/Z-ordered layout writers. Readers go

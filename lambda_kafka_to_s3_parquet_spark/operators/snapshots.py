@@ -89,9 +89,11 @@ import json
 import re
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _SNAP_DIR = "_snapshots"
 _MARKER_RE = re.compile(r"^latest-(\d+)$")
@@ -744,76 +746,6 @@ def _group_rels(rels: list[str], partition_by: list[str] | None) -> dict[str, li
     return out
 
 
-def _collect_dir_stats(
-    spark: SparkSession, table: str, rels: list[str], stats_cols: list[str]
-) -> dict[str, dict[str, list]]:
-    """Per-directory zone maps (min/max per stat column) for a commit's
-    just-written dirs — the Iceberg/Delta data-skipping statistic, here
-    at dir granularity to match the manifest's unit of reference.
-
-    Collected by reading BACK the commit's own files grouped on
-    ``_metadata.file_path``'s dirname (one commit-sized scan) rather
-    than re-deriving hive dir names from partition VALUES — Spark's dir
-    naming (null → __HIVE_DEFAULT_PARTITION__, URL-escaping) would have
-    to be replicated exactly, and a mismatch would silently attach stats
-    to a nonexistent dir. Matching on the physical path cannot drift.
-    Values serialize as JSON numbers (ints/floats) or strings
-    (everything else via ``str`` — ISO timestamps/dates compare
-    lexicographically), the same normalization the read-side overlap
-    test applies."""
-    commit_id = rels[0].split("/")[1]
-    base = f"{table}/data/{commit_id}"
-    # ``rels`` is always the COMPLETE dir set of one just-written commit
-    # (every caller passes _write_commit_data's return), so scanning the
-    # commit dir itself is the identical file set — one driver-side
-    # recursive listing instead of len(rels) sequential per-dir listings
-    # (30-dir date-partitioned commits measured ~0.2-0.3 s of pure
-    # listing per stats call; guide §6 small-file/listing cost).
-    df = spark.read.option("basePath", base).parquet(base)
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = (
-        df.withColumn(
-            "_dir", F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
-        )
-        .groupBy("_dir")
-        .agg(*aggs)
-        .collect()
-    )
-
-    def norm(v):
-        return v if isinstance(v, (int, float)) and not isinstance(v, bool) else (
-            None if v is None else str(v)
-        )
-
-    out: dict[str, dict[str, list]] = {}
-    for r in rows:
-        # absolute file URI -> table-relative dir, by suffix match
-        rel = next((x for x in rels if r["_dir"].endswith(x)), None)
-        if rel is None:
-            # The commit-dir scan above is only the same file set as
-            # ``rels`` when rels is the COMPLETE dir set of the commit
-            # (every current caller passes _write_commit_data's full
-            # return). A future caller passing a SUBSET would silently
-            # compute stats from files outside its rels — fail loudly
-            # instead, making the complete-commit invariant part of the
-            # contract.
-            raise AssertionError(
-                f"_collect_dir_stats scanned dir {r['_dir']!r} not in the "
-                f"caller's rels for commit {commit_id}: rels must be the "
-                "complete dir set of one just-written commit"
-            )
-        stats = {}
-        for c in stats_cols:
-            lo, hi = norm(r[f"_lo_{c}"]), norm(r[f"_hi_{c}"])
-            if lo is not None and hi is not None:
-                stats[c] = [lo, hi]
-        if stats:
-            out[rel] = stats
-    return out
-
-
 #: Per-dir bloom sizing: 8192 bits (1 KiB -> 2048 hex chars in the
 #: manifest) × 6 hashes ≈ 1% false positives at ~850 distinct keys/dir,
 #: saturating gracefully (a full bloom prunes nothing but stays correct).
@@ -829,7 +761,7 @@ _MERGE_BLOOM_PROBE_CAP = 1024
 
 def _bloom_py_positions(value, m: int, k: int) -> list[int]:
     """Kirsch-Mitzenmacher bit positions for one key — PYTHON twin of the
-    JVM expression in :func:`_collect_dir_blooms`: 60 bits of
+    JVM expression in :func:`_collect_dir_pruning`: 60 bits of
     md5(str(value)), split into (h1, h2|1), positions (h1 + i·h2) mod m.
     md5-over-the-string rather than xxhash64 so the prune side can probe
     WITHOUT a Spark job and the construction stays engine-portable."""
@@ -840,33 +772,63 @@ def _bloom_py_positions(value, m: int, k: int) -> list[int]:
     return [(h1 + i * h2) % m for i in range(k)]
 
 
-def _collect_dir_blooms(
+def _collect_dir_pruning(
     spark: SparkSession,
     table: str,
     rels: list[str],
-    bloom_cols: list[str],
+    df: DataFrame,
+    partition_by: list[str] | None,
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
     m: int = _BLOOM_M,
     k: int = _BLOOM_K,
-) -> dict[str, dict[str, dict]]:
-    """Per-directory BLOOM FILTERS over point-lookup key columns — the
-    membership complement of :func:`_collect_dir_stats`' range zone
-    maps: min/max prunes key-CLUSTERED tables, but a GDPR-style delete
-    by user id on a time-partitioned table intersects every dir's key
-    range — a per-dir bloom answers "could this key live here?" per
-    directory regardless of clustering. Collected like the zone maps
-    (read back the commit's own files grouped on the physical dir), bits
-    set by a JVM md5 expression whose python twin
-    (:func:`_bloom_py_positions`) probes with no Spark job. NULLs set no
-    bits (a point probe ``col = NULL`` matches nothing). Float/double
-    key columns are rejected — their string forms are not a stable
-    equality domain."""
-    if m < 64 or m % 8:
+) -> tuple[dict[str, dict], dict[str, dict]]:
+    """Per-directory pruning metadata for a commit's just-written dirs,
+    ``(stats, blooms)``, from ONE read-back pass: a single
+    ``groupBy(dir)`` over the commit's own files computes both.
+
+    * ``stats`` — ZONE MAPS (min/max per ``stats_cols`` column), the
+      Iceberg/Delta data-skipping statistic at dir granularity to match
+      the manifest's unit of reference. Values serialize as JSON numbers
+      (ints/floats) or strings (everything else via ``str`` — ISO
+      timestamps/dates compare lexicographically), the read-side overlap
+      test's normalization.
+    * ``blooms`` — per-dir BLOOM FILTERS over ``bloom_cols`` point-lookup
+      keys, the membership complement of the range zone maps: min/max
+      prunes key-CLUSTERED tables, but a GDPR-style delete by user id on
+      a time-partitioned table intersects every dir's key range. Bits
+      are set by a JVM md5 expression whose python twin
+      (:func:`_bloom_py_positions`) probes with no Spark job. NULLs set
+      no bits (a point probe ``col = NULL`` matches nothing).
+
+    The read is pinned to ``df``'s own data schema (the frame the commit
+    just wrote), so no schema-inference job runs; partition columns are
+    still inferred from the dir names exactly as an unpinned read would.
+    Rows are keyed by ``_metadata.file_path``'s dirname rather than by
+    re-deriving hive dir names from partition VALUES — Spark's dir
+    naming (null → __HIVE_DEFAULT_PARTITION__, escaping) would have to
+    be replicated exactly. That path is a URI (``%`` → ``%25``, space →
+    ``%20``), so it is URL-decoded before it is matched to ``rels``.
+    Dirs with nothing to record are absent from both maps."""
+    stats_cols, bloom_cols = stats_cols or [], bloom_cols or []
+    if not rels or not (stats_cols or bloom_cols):
+        return {}, {}
+    if bloom_cols and (m < 64 or m % 8):
         raise ValueError(f"bloom_bits must be a multiple of 8 >= 64, got {m}")
     commit_id = rels[0].split("/")[1]
     base = f"{table}/data/{commit_id}"
-    # single-path read of the whole commit dir — same file set as rels
-    # (see _collect_dir_stats), one listing instead of len(rels)
-    df = spark.read.option("basePath", base).parquet(base)
+    pset = set(partition_by or [])
+    # ``rels`` is always the COMPLETE dir set of one just-written commit
+    # (every caller passes _write_commit_data's return), so one read of
+    # the commit dir is the identical file set — one driver-side
+    # recursive listing instead of len(rels) per-dir listings
+    read = (
+        spark.read.schema(
+            StructType([f for f in df.schema.fields if f.name not in pset])
+        )
+        .option("basePath", base)
+        .parquet(base)
+    )
     # WHITELIST, not blacklist: bits are set from the JVM
     # CAST(col AS STRING) but probed with python str(value), and the two
     # only provably agree for integral/string/date keys. Everything else
@@ -877,7 +839,7 @@ def _collect_dir_blooms(
     # that breaks correctness instead of costing I/O.
     _BLOOM_OK = ("tinyint", "smallint", "int", "bigint", "string", "date")
     for c in bloom_cols:
-        t = df.schema[c].dataType.simpleString()
+        t = read.schema[c].dataType.simpleString()
         if t not in _BLOOM_OK:
             raise ValueError(
                 f"bloom_cols column {c!r} is {t}: only "
@@ -885,57 +847,66 @@ def _collect_dir_blooms(
                 "string forms (the probe must hash exactly what the "
                 "writer hashed) — cast the key to one of those first"
             )
-    df = df.withColumn(
-        "_dir", F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
-    )
-    # ONE read-back job for every bloom column (the zone-map collector's
-    # one-pass shape): each row contributes k positions per column as
-    # (column index, position) pairs, flattened and exploded once, then
-    # a single (_dir, column) collect_set. NULLs contribute no pairs
-    # (md5(NULL) is NULL -> the struct's pos is NULL -> filtered).
-    pairs = []
+    aggs = []
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
     for ci, c in enumerate(bloom_cols):
+        # k collect_sets of bit positions per column; md5(NULL) is NULL,
+        # so a NULL key yields NULL positions, which collect_set skips
         h = F.conv(
             F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10
         ).cast("long")
         h1 = F.pmod(h, F.lit(1 << 30))
         h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
-        pairs += [
-            F.struct(
-                F.lit(ci).alias("ci"),
-                F.pmod(h1 + F.lit(i) * h2, F.lit(m)).alias("pos"),
+        aggs += [
+            F.collect_set(F.pmod(h1 + F.lit(i) * h2, F.lit(m))).alias(
+                f"_b{ci}_{i}"
             )
             for i in range(k)
         ]
-    rows = (
-        df.select("_dir", F.explode(F.array(*pairs)).alias("_cp"))
-        .filter(F.col("_cp.pos").isNotNull())
-        .groupBy("_dir", F.col("_cp.ci").alias("_ci"))
-        .agg(F.collect_set(F.col("_cp.pos")).alias("_ps"))
-        .collect()
-    )
-    out: dict[str, dict[str, dict]] = {}
-    acc: dict[tuple[str, int], bytearray] = {}
+    dir_of = F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
+    rows = read.groupBy(dir_of.alias("_dir")).agg(*aggs).collect()
+
+    def norm(v):
+        return v if isinstance(v, (int, float)) and not isinstance(v, bool) else (
+            None if v is None else str(v)
+        )
+
+    rel_set = set(rels)
+    anchor = f"/data/{commit_id}"
+    stats: dict[str, dict[str, list]] = {}
+    blooms: dict[str, dict[str, dict]] = {}
     for r in rows:
-        rel = next((x for x in rels if r["_dir"].endswith(x)), None)
-        if rel is None:
-            # same complete-commit invariant as _collect_dir_stats: the
-            # whole-commit-dir scan is only equivalent to rels when rels
-            # is the commit's full dir set — a subset caller would get
-            # blooms built from files outside its rels
+        d = unquote(r["_dir"])
+        rel = d[d.rfind(anchor) + 1 :]
+        if rel not in rel_set:
+            # The commit-dir read is only the same file set as ``rels``
+            # when rels is the COMPLETE dir set of the commit. A caller
+            # passing a SUBSET would silently get metadata built from
+            # files outside its rels — fail loudly instead.
             raise AssertionError(
-                f"_collect_dir_blooms scanned dir {r['_dir']!r} not in "
-                f"the caller's rels for commit {commit_id}: rels must be "
-                "the complete dir set of one just-written commit"
+                f"_collect_dir_pruning scanned dir {d!r} not in the "
+                f"caller's rels for commit {commit_id}: rels must be the "
+                "complete dir set of one just-written commit"
             )
-        bits = acc.setdefault((rel, r["_ci"]), bytearray(m // 8))
-        for p in r["_ps"]:
-            bits[p // 8] |= 1 << (p % 8)
-    for (rel, ci), bits in acc.items():
-        out.setdefault(rel, {})[bloom_cols[ci]] = {
-            "m": m, "k": k, "bits": bits.hex()
-        }
-    return out
+        s = {}
+        for c in stats_cols:
+            lo, hi = norm(r[f"_lo_{c}"]), norm(r[f"_hi_{c}"])
+            if lo is not None and hi is not None:
+                s[c] = [lo, hi]
+        if s:
+            stats[rel] = s
+        b = {}
+        for ci, c in enumerate(bloom_cols):
+            bits = bytearray(m // 8)
+            for i in range(k):
+                for p in r[f"_b{ci}_{i}"]:
+                    bits[p // 8] |= 1 << (p % 8)
+            if any(bits):
+                b[c] = {"m": m, "k": k, "bits": bits.hex()}
+        if b:
+            blooms[rel] = b
+    return stats, blooms
 
 
 def _bloom_probe_canonical(col: str, value) -> str:
@@ -968,6 +939,19 @@ def _bloom_probe_canonical(col: str, value) -> str:
             "excludes timestamps) — probe with the .date()"
         )
     return value.isoformat() if isinstance(value, _dt.date) else str(value)
+
+
+def _check_key_probes(arg: str, probes: list[tuple] | None) -> None:
+    """Refuse a ``(col, values)`` key probe whose ``values`` is a bare
+    ``str``/``bytes``: iterating it would probe each CHARACTER, so a
+    present key reads as absent and its rows are silently dropped."""
+    for col, values in probes or ():
+        if isinstance(values, (str, bytes, bytearray)):
+            raise TypeError(
+                f"{arg} values for column {col!r} must be a list of keys, "
+                f"got the bare {type(values).__name__} {values!r} — "
+                f"write [({col!r}, [{values!r}])]"
+            )
 
 
 def _bloom_prune(
@@ -1665,12 +1649,13 @@ def snapshot_append(
     snapshot's — see :func:`_commit`). ``stats_cols`` records per-dir
     zone maps (min/max) for those columns in the manifest, enabling
     ``snapshot_read(skip_where=...)`` file skipping BEYOND partition
-    pruning (one commit-sized read-back pass at write time);
-    ``bloom_cols`` records per-dir BLOOM filters for point-lookup keys,
-    enabling ``snapshot_read(skip_keys=...)`` /
+    pruning; ``bloom_cols`` records per-dir BLOOM filters for
+    point-lookup keys, enabling ``snapshot_read(skip_keys=...)`` /
     ``snapshot_delete_where(prune_keys=...)`` membership pruning even
-    where the table is NOT clustered on the key (the GDPR-delete shape —
-    see :func:`_collect_dir_blooms`). Additive
+    where the table is NOT clustered on the key (the GDPR-delete shape).
+    Both come from ONE schema-pinned read-back of the commit's own files
+    (:func:`_collect_dir_pruning`: one aggregate, two Spark jobs, added
+    to the write's one — only when either option is given). Additive
     schema evolution is validated BEFORE the data write
     (:func:`_merged_commit_schema`): new columns are fine, a type
     change fails fast with nothing landed.
@@ -1701,13 +1686,8 @@ def snapshot_append(
     rels = _write_commit_data(df, table, partition_by)
     if not rels:
         return read_v
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols
-        else None
+    stats, blooms = _collect_dir_pruning(
+        spark, table, rels, df, partition_by, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark, table, "append", _group_rels(rels, partition_by), meta=meta,
@@ -1735,7 +1715,9 @@ def snapshot_overwrite_partitions(
     semantics) — but via fresh files + manifest/marker publish, so a
     concurrent reader of the PREVIOUS snapshot keeps its files and a
     crash before the marker changes nothing. Empty input is a no-op.
-    ``stats_cols`` as in :func:`snapshot_append`, and the same write-time
+    ``stats_cols`` / ``bloom_cols`` as in :func:`snapshot_append` (the
+    same single read-back pass, :func:`_collect_dir_pruning`, over the
+    freshly written dirs only), and the same write-time
     additive-evolution gate applies.
 
     Concurrency: this is the one REPLACEMENT verb that rebases under
@@ -1768,11 +1750,6 @@ def snapshot_overwrite_partitions(
         spark, table, df, partition_by, committed=read_v
     )
     rels = _write_commit_data(df, table, partition_by)
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
-    )
     drops = set(drop_partitions or ())
     if not rels and not drops:
         return read_v
@@ -1790,8 +1767,8 @@ def snapshot_overwrite_partitions(
                 "dropped, nothing written) — drop or rebuild the table "
                 "instead (the snapshot_overwrite_all rule)"
             )
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
+    stats, blooms = _collect_dir_pruning(
+        spark, table, rels, df, partition_by, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark, table, "overwrite", grouped, replaced=set(grouped) | drops,
@@ -1913,7 +1890,10 @@ def snapshot_read(
     can't help. Same conservative contract: no bloom → always read,
     the caller still applies the real filter, false positives only
     cost I/O. Composes with ``skip_where`` (a dir must pass both).
+    ``values`` must be a list: a bare ``str``/``bytes`` raises
+    ``TypeError``.
     """
+    _check_key_probes("skip_keys", skip_keys)
     committed = current_version(spark, table, branch=branch)
     if as_of is not None:
         if version is not None:
@@ -4044,13 +4024,8 @@ def snapshot_overwrite_all(
             "unreadable empty snapshot; drop or rebuild the table instead"
         )
     current = _load_manifest(spark, table, read_v, branch=branch)
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols
-        else None
+    stats, blooms = _collect_dir_pruning(
+        spark, table, rels, df, partition_by, stats_cols, bloom_cols, bloom_bits
     )
     pset = set(partition_by or [])
     return _commit(
@@ -4119,6 +4094,7 @@ def snapshot_delete_where(
 
     ``branch`` targets a named branch (the audit-fixup shape: scrub bad
     rows on the branch before fast-forwarding main)."""
+    _check_key_probes("prune_keys", prune_keys)
     committed = current_version(spark, table, branch=branch)
     if not committed:
         raise ValueError(f"snapshot table {table} is empty/uninitialized")
@@ -4203,15 +4179,8 @@ def snapshot_delete_where(
             f"never read: {sorted(grouped)} — manifest and data layouts "
             "disagree; rewrite the table with one consistent layout"
         )
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols)
-        if stats_cols and rels
-        else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
+    stats, blooms = _collect_dir_pruning(
+        spark, table, rels, survivors, pcols, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark,
@@ -4974,15 +4943,8 @@ def snapshot_merge_into(
     # they APPEND to untouched partitions / create new ones
     for k, dirs in grouped.items():
         new_partitions.setdefault(k, []).extend(dirs)
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols)
-        if stats_cols and rels
-        else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
+    stats, blooms = _collect_dir_pruning(
+        spark, table, rels, combined, pcols, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark,

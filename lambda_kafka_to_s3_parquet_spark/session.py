@@ -111,13 +111,18 @@ def get_spark(
         # floor was measured at 0.74 s/commit for 1-row appends with a
         # third of it in committer renames + checksum-sidecar creates.
         # v2 commits task output directly to the destination (no final
-        # driver-side mergePaths pass) — safe under the engine's commit
-        # protocols because every snapshot/store write lands in a
-        # fresh-uuid dir whose visibility is gated by the manifest/
-        # marker swap, so partially-written dirs are never referenced
-        # (the Iceberg argument); _SUCCESS markers are dead weight for
-        # the same reason (no reader checks them — manifest gates
-        # visibility). Measured: 50 tiny appends 35.6-38.0 s -> 31.6-
+        # driver-side mergePaths pass). That is safe ONLY for snapshot
+        # and store writes: each lands in a fresh-uuid dir whose
+        # visibility is gated by the manifest/marker swap, so a
+        # partially-written dir is never referenced (the Iceberg
+        # argument), and for them _SUCCESS markers are dead weight (no
+        # reader checks them). Plain-dir writers (the sink's
+        # write_partitioned / clustered layouts, anything reading a
+        # directory straight off the filesystem) get no such gate:
+        # under v2 a failed job can leave some tasks' files in the
+        # destination, so after a failed job their output dir is
+        # POISONED — clear it or rewrite into a fresh dir, never read
+        # it as-is. Measured: 50 tiny appends 35.6-38.0 s -> 31.6-
         # 32.7 s (~13%) with the local-FS checksum skip below; on
         # object stores these are the standard settings (no rename, no
         # sidecar files).

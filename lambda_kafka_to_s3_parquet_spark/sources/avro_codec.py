@@ -69,7 +69,9 @@ def _read_varint_zigzag(buf: io.BytesIO) -> int:
     return (acc >> 1) ^ -(acc & 1)
 
 
-def _read_string(buf: io.BytesIO) -> str:
+def _read_string(buf: io.BytesIO, size: int) -> str:
+    """One length-prefixed UTF-8 string; ``size`` is the byte length of
+    the whole record body, computed once per record by the caller."""
     n = _read_varint_zigzag(buf)
     # Validate the declared length BEFORE reading: a garbage varint can
     # decode to a negative length (read(-1) would silently slurp to EOF)
@@ -79,8 +81,7 @@ def _read_string(buf: io.BytesIO) -> str:
     # surface as EOFError/ValueError, never as an allocation attempt.
     if n < 0:
         raise ValueError(f"negative string length {n}")
-    remaining = buf.getbuffer().nbytes - buf.tell()
-    if n > remaining:
+    if n > size - buf.tell():
         raise EOFError("truncated string")
     raw = buf.read(n)
     if len(raw) != n:
@@ -151,6 +152,7 @@ PROMOTABLE: frozenset[tuple[str, str]] = frozenset(
 def decode_avro_record(body: bytes, fields: tuple[AvroField, ...]) -> dict:
     """Decode one Avro binary record body against a flat field list."""
     buf = io.BytesIO(body)
+    size = len(body)
     row: dict = {}
     for f in fields:
         if f.nullable:
@@ -165,7 +167,7 @@ def decode_avro_record(body: bytes, fields: tuple[AvroField, ...]) -> dict:
         elif f.type == "float":
             row[f.name] = _read_float(buf)
         else:
-            row[f.name] = _read_string(buf)
+            row[f.name] = _read_string(buf, size)
     if buf.read(1):
         raise ValueError("trailing bytes after record")
     return row
