@@ -541,6 +541,55 @@ def _time_set(
     return timings, weather
 
 
+#: The printed line must fit the ~2 kB stdout tail a bench caller
+#: records; 1900 bytes leaves ~100 B of slack.
+_TAIL_BUDGET = 1900
+_STEAL_TOP_N = 5
+
+
+def fit_tail(out: dict, budget: int = _TAIL_BUDGET) -> tuple[str, list[str]]:
+    """The printed JSON line for ``out``, trimmed to ``budget`` bytes,
+    plus one warning per trimming stage applied.
+
+    The queries dict grows every round, and an oversized line is parsed
+    as nothing at all, so the line degrades loudly and parseably (the
+    full dict always lives in BENCH_local.json):
+
+    1. ``steal_per_query`` keeps its top ``_STEAL_TOP_N`` entries, rounded
+       to 0.1 CPU-s, and ``steal_per_query_dropped`` counts the rest —
+       the worst-polluted queries stay adjudicable from the line alone.
+    2. If that is still too long, the per-query timings go too
+       (``queries_truncated_to_fit_tail`` counts them). Stage 2 starts
+       from the stage-1 dict, so the stage-1 marker survives.
+
+    Raises ``AssertionError`` if even the stage-2 line overflows."""
+    line = json.dumps(out, separators=(",", ":"))
+    warnings: list[str] = []
+    if len(line) <= budget:
+        return line, warnings
+    steal = out.get("steal_per_query") or {}
+    top = sorted(steal.items(), key=lambda kv: (-kv[1], kv[0]))[:_STEAL_TOP_N]
+    slim1 = dict(out)
+    slim1["steal_per_query"] = {k: round(v, 1) for k, v in top}
+    slim1["steal_per_query_dropped"] = len(steal) - len(top)
+    line = json.dumps(slim1, separators=(",", ":"))
+    warnings.append(
+        f"bench line exceeded the {budget} B tail budget; steal_per_query "
+        f"cut to its top {_STEAL_TOP_N} entries"
+    )
+    if len(line) <= budget:
+        return line, warnings
+    slim2 = {k: v for k, v in slim1.items() if k != "queries"}
+    slim2["queries_truncated_to_fit_tail"] = len(out["queries"])
+    line = json.dumps(slim2, separators=(",", ":"))
+    warnings.append(
+        f"bench line exceeded the {budget} B tail budget; per-query "
+        "timings dropped"
+    )
+    assert len(line) <= budget, "even the slim bench line overflows"
+    return line, warnings
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_small_dir = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
@@ -643,41 +692,9 @@ def main() -> None:
         ),
         "value": round(sum(timings.values()), 3),
     }
-    line = json.dumps(out, separators=(",", ":"))
-    # Guard the tail-window budget AT BENCH TIME: the queries dict grows
-    # every round (r10 added w15+x54), and an oversized line reproduces
-    # the rounds-5-9 silent "parsed": null failures. 1900 bytes leaves
-    # ~100 B of slack inside the ~2 kB tail. Degrade loudly + parseably:
-    # drop per-query keys from the PRINTED line (totals survive; the full
-    # dict always lives in BENCH_local.json) and say so on stderr.
-    _TAIL_BUDGET = 1900
-    if len(line) > _TAIL_BUDGET:
-        # degrade in two stages: steal_per_query is the newest addition
-        # and lives in BENCH_local.json regardless — drop it before
-        # touching the per-query timings the round-over-round comparison
-        # needs (a heavily polluted run is exactly when the map is big).
-        slim1 = {k: v for k, v in out.items() if k != "steal_per_query"}
-        slim1["steal_per_query_truncated_to_fit_tail"] = len(
-            out["steal_per_query"]
-        )
-        line = json.dumps(slim1, separators=(",", ":"))
-        print(
-            f"WARNING: bench line exceeded the {_TAIL_BUDGET} B tail "
-            "budget; steal_per_query dropped from stdout (see "
-            "BENCH_local.json)",
-            file=sys.stderr, flush=True,
-        )
-    if len(line) > _TAIL_BUDGET:
-        slim = {k: v for k, v in out.items()
-                if k not in ("queries", "steal_per_query")}
-        slim["queries_truncated_to_fit_tail"] = len(out["queries"])
-        line = json.dumps(slim, separators=(",", ":"))
-        print(
-            f"WARNING: bench line exceeded the {_TAIL_BUDGET} B tail budget; "
-            "per-query timings dropped from stdout (see BENCH_local.json)",
-            file=sys.stderr, flush=True,
-        )
-        assert len(line) <= _TAIL_BUDGET, "even the slim bench line overflows"
+    line, warnings = fit_tail(out)
+    for w in warnings:
+        print(f"WARNING: {w} (see BENCH_local.json)", file=sys.stderr, flush=True)
     full = dict(out)
     full["weather"] = weather
     if small:

@@ -84,6 +84,7 @@ fold (:func:`_pcol_map`).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import re
@@ -91,9 +92,10 @@ import time
 import uuid
 from urllib.parse import unquote
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 _SNAP_DIR = "_snapshots"
 _MARKER_RE = re.compile(r"^latest-(\d+)$")
@@ -1104,14 +1106,44 @@ def _merged_commit_schema(
 
 def _frame_cschema(df: DataFrame, partition_by: list[str] | None) -> list:
     """This commit's OWN ordered data-column schema, as recorded in the
-    manifest's ``cschemas``: the read path groups commits with identical
-    entries into one multi-path scan (see :func:`_read_dirs`)."""
+    manifest's ``cschemas``: the read path pins each commit's scan to it
+    and groups commits with identical entries into one multi-path scan
+    (see :func:`_read_dirs_raw_build`)."""
     pset = set(partition_by or [])
     return [
         [f.name, f.dataType.simpleString()]
         for f in df.schema.fields
         if f.name not in pset
     ]
+
+
+def _pinned_reader(spark: SparkSession, cschema: list | None):
+    """A parquet reader pinned to a recorded ``[[name, simpleString],
+    ...]`` schema (a commit's ``cschemas`` entry, a delete entry's
+    ``schema``), so building the scan runs no schema-inference job.
+    With no usable recorded schema — none recorded (pre-upgrade
+    entries), or types that do not parse back to exactly what was
+    recorded (a nested field name that would need quoting in DDL) — the
+    reader infers, as an unpinned read does."""
+    pinned = _parse_cschema(json.dumps(cschema)) if cschema else None
+    return spark.read if pinned is None else spark.read.schema(pinned)
+
+
+@functools.lru_cache(maxsize=256)
+def _parse_cschema(key: str) -> StructType | None:
+    cschema = json.loads(key)
+    ddl = ", ".join(
+        "`{}` {}".format(name.replace("`", "``"), t) for name, t in cschema
+    )
+    try:
+        parsed = _parse_datatype_string(ddl)
+    except ParseException:
+        return None
+    if not isinstance(parsed, StructType) or [
+        [f.name, f.dataType.simpleString()] for f in parsed.fields
+    ] != cschema:
+        return None
+    return parsed
 
 
 def _commit(
@@ -1149,8 +1181,9 @@ def _commit(
     snapshot's, so maintenance commits never erase it. ``cschema`` is
     THIS commit's own ordered data-column schema (``[[name, type],…]``),
     recorded per commit uuid under ``cschemas`` so the read path can
-    group same-schema commits into one multi-path scan without touching
-    footers; entries for dropped commits fall out with their dirs.
+    group same-schema commits into one multi-path scan and pin each scan
+    to it (no schema-inference job); entries for dropped commits fall
+    out with their dirs.
     ``restore`` is an OLD manifest whose per-dir stats and per-commit
     schemas re-merge for any of its dirs this commit brings back
     (rollback): stats/cschemas normally carry forward from the LATEST
@@ -1572,13 +1605,16 @@ def _commit(
         if kept_ps:
             new_root["pspec"] = kept_ps
         # MERGE-ON-READ key-delete entries (round 13) ride the root:
-        # {file, cols, dirs} — ``dirs`` pins the delete to the dirs LIVE
-        # AT DELETE TIME (later commits are never affected; re-inserted
-        # keys survive). Carry: a replacement drops the entry's dirs in
-        # replaced partitions unless the very same dir was carried
-        # forward (delete_where/merge untouched survivors); an entry
-        # with no dirs left falls out (compaction folds MoR deletes by
-        # construction). Rollback reverts to the TARGET's entries.
+        # {file, cols, dirs, schema} — ``dirs`` pins the delete to the
+        # dirs LIVE AT DELETE TIME (later commits are never affected;
+        # re-inserted keys survive); ``schema`` is the key file's column
+        # schema, which its read is pinned to (older entries have none
+        # and read with inference). Carry: a replacement drops the
+        # entry's dirs in replaced partitions unless the very same dir
+        # was carried forward (delete_where/merge untouched survivors);
+        # an entry with no dirs left falls out (compaction folds MoR
+        # deletes by construction). Rollback reverts to the TARGET's
+        # entries.
         if restore is not None:
             kept_deletes = [dict(de) for de in restore.get("deletes", [])]
         else:
@@ -1924,23 +1960,11 @@ def snapshot_read(
         if skip_keys:
             kept = _bloom_prune(manifest, kept, skip_keys)
         if not kept:
-            # provably-empty result with the right schema: scan one dir
-            # PER COMMIT but keep no rows (cheap — limit(0) prunes at
-            # the source; one dir per commit, not one overall, so the
-            # empty frame still carries the full additive-evolution
-            # column union)
-            first_of_commit: dict[str, str] = {}
-            for d in all_dirs:
-                first_of_commit.setdefault(d.split("/")[1], d)
-            kept = sorted(first_of_commit.values())
-            empty = True
-        else:
-            empty = False
+            # provably empty: a zero-row frame with the full read's
+            # columns, from one dir per read signature (not per commit)
+            return _read_empty(spark, table, manifest)
         all_dirs = kept
-    out = _read_dirs(spark, table, all_dirs, manifest)
-    if (skip_where or skip_keys) and empty:
-        out = out.limit(0)
-    return out
+    return _read_dirs(spark, table, all_dirs, manifest)
 
 
 def _manifest_pcols(partitions: dict) -> list[str]:
@@ -2476,7 +2500,9 @@ def _read_dirs(
                 f = _read_dirs_raw(spark, table, sorted(groups[ids]), manifest)
                 for i in ids:
                     de = dels[i]
-                    keys = spark.read.parquet(f"{table}/{de['file']}")
+                    keys = _pinned_reader(spark, de.get("schema")).parquet(
+                        f"{table}/{de['file']}"
+                    )
                     f = f.join(keys, de["cols"], "left_anti")
                 frames.append(f)
             out = frames[0]
@@ -2486,17 +2512,60 @@ def _read_dirs(
     return _read_dirs_raw(spark, table, all_dirs, manifest)
 
 
-#: Constructed-frame memo (r14, guide §1.2/§6): building a per-commit
-#: scan LISTS its dirs and reads a parquet footer driver-side, so a
-#: snapshot_read costs real sequential wall BEFORE any job runs
-#: (~0.1 s per call on a 6-commit × 30-dir table; a protocol exercise
-#: like x44 resolves only 15 distinct dir-sets across 31 reads). Commit
-#: dirs are IMMUTABLE once published (new commits mint new uuids, never
-#: append in place), so a frame keyed on (session, table, exact dir
-#: set, the manifest fields that shape construction) can be handed back
-#: verbatim — this memoizes PLAN CONSTRUCTION only; every action on the
-#: frame still scans parquet. The metadata-plane analog
-#: (_ASSEMBLED_CACHE) carries the same immutability argument.
+def _read_empty(spark: SparkSession, table: str, manifest: dict) -> DataFrame:
+    """A ZERO-ROW frame with the columns a full read of ``manifest``'s
+    (non-empty) snapshot has, scanning one dir per distinct READ
+    SIGNATURE and then ``limit(0)`` (prunes at the source). The
+    signature is everything that shapes a dir's columns: its commit's
+    recorded schema, column map and drop list, and per partition key
+    its name and the type Spark infers for its value. Every signature
+    is read, so the frame keeps the full additive-evolution column
+    union and widens partition types exactly as the full read does; a
+    uniform table lists one dir, not one per commit. A commit with no
+    recorded schema is its own signature."""
+
+    def ptype(raw: str) -> str:
+        # the inferred type where it is certain from the value's shape
+        # (NULL, int, bigint); any other value stands for itself
+        if raw == "__HIVE_DEFAULT_PARTITION__":
+            return "null"
+        if re.fullmatch(r"[+-]?[0-9]+", raw):
+            n = int(raw)
+            if -(1 << 31) <= n < 1 << 31:
+                return "int"
+            if -(1 << 63) <= n < 1 << 63:
+                return "bigint"
+        return "=" + raw
+
+    cschemas = manifest.get("cschemas", {})
+    colmaps = manifest.get("colmaps", {})
+    dropm = manifest.get("dropcols", {})
+    reps: dict[str, str] = {}
+    for d in sorted(x for ds in manifest["partitions"].values() for x in ds):
+        commit = d.split("/")[1]
+        sig = json.dumps(
+            [
+                cschemas.get(commit, commit),
+                sorted(colmaps.get(commit, {}).items()),
+                sorted(dropm.get(commit, ())),
+                [[k, ptype(v)] for k, v in _dir_pvals(d).items()],
+            ]
+        )
+        reps.setdefault(sig, d)
+    return _read_dirs(spark, table, sorted(reps.values()), manifest).limit(0)
+
+
+#: Constructed-frame memo: building a per-commit scan LISTS its dirs
+#: driver-side (and, for a commit with no recorded schema, runs a
+#: schema-inference job), so a snapshot_read costs real sequential wall
+#: BEFORE any of its own jobs run (a protocol exercise like x44 resolves
+#: only 15 distinct dir-sets across 31 reads). Commit dirs are IMMUTABLE
+#: once published (new commits mint new uuids, never append in place),
+#: so a frame keyed on (session, table, exact dir set, the manifest
+#: fields that shape construction) can be handed back verbatim — this
+#: memoizes PLAN CONSTRUCTION only; every action on the frame still
+#: scans parquet. The metadata-plane analog (_ASSEMBLED_CACHE) carries
+#: the same immutability argument.
 _FRAME_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -2633,7 +2702,8 @@ def _read_dirs_raw_build(
             ]
         )
 
-    scan_specs: list[tuple[str, str | None, list[str]]] = []  # (commit, basePath, paths)
+    # (commit, basePath, paths, recorded schema or None)
+    scan_specs: list[tuple[str, str | None, list[str], list | None]] = []
     flat_groups: dict[str, list[str]] = {}
     flat_first: dict[str, str] = {}
     cschemas = manifest.get("cschemas", {})
@@ -2659,21 +2729,25 @@ def _read_dirs_raw_build(
                     commit_id,
                     f"{table}/data/{commit_id}",
                     [f"{table}/{d}" for d in sorted(dirs)],
+                    sch,
                 )
             )
     for key, paths in flat_groups.items():
-        scan_specs.append((flat_first[key], None, sorted(paths)))
+        cid = flat_first[key]
+        scan_specs.append((cid, None, sorted(paths), cschemas[cid]))
 
-    # Constructing each per-commit scan lists its dirs and reads a footer
-    # DRIVER-side; a partitioned multi-commit table pays len(commits) ×
-    # len(dirs) sequential round-trips per snapshot_read (measured
-    # ~0.7 s of pure construction on a 6-commit × 30-dir table — as much
-    # as the census action itself). The constructions are independent —
-    # build them on a small thread pool (guide §2.6 overlap; pure plan
-    # construction, no jobs) and keep the deterministic commit-id order.
+    # Each scan is PINNED to its commit's recorded data schema
+    # (:func:`_pinned_reader`), so building it only LISTS its dirs
+    # driver-side: an unpinned parquet read runs a schema-inference Spark
+    # job per scan before the query's own jobs. Partition columns still
+    # infer from the dir names (the pinned schema holds data columns
+    # only). A commit with no usable recorded schema (pre-upgrade tables)
+    # keeps the inferred read. Listing is still one sequential round-trip
+    # per dir, so the independent builds run on a small thread pool and
+    # keep the deterministic commit-id order.
     def _build(spec):
-        cid, base_path, paths = spec
-        reader = spark.read
+        cid, base_path, paths, sch = spec
+        reader = _pinned_reader(spark, sch)
         if base_path is not None:
             reader = reader.option("basePath", base_path)
         return cid, apply_map(cid, reader.parquet(*paths))
@@ -2753,20 +2827,13 @@ def _read_state_side(
     """One side of a pruned state diff: scan exactly ``dirs`` (a subset
     of the version's manifest). Empty ``dirs`` over a non-empty snapshot
     returns a ZERO-ROW frame carrying the version's full additive column
-    union (one dir per commit, ``limit(0)`` — prunes at the source);
-    ``None`` when the snapshot itself is empty (v0 — the caller aligns
-    against the other side's schema)."""
-    all_dirs = sorted(x for ds in manifest["partitions"].values() for x in ds)
+    union (:func:`_read_empty`); ``None`` when the snapshot itself is
+    empty (v0 — the caller aligns against the other side's schema)."""
     if dirs:
         return _read_dirs(spark, table, sorted(dirs), manifest)
-    if not all_dirs:
+    if not any(manifest["partitions"].values()):
         return None
-    first_of_commit: dict[str, str] = {}
-    for x in all_dirs:
-        first_of_commit.setdefault(x.split("/")[1], x)
-    return _read_dirs(
-        spark, table, sorted(first_of_commit.values()), manifest
-    ).limit(0)
+    return _read_empty(spark, table, manifest)
 
 
 def snapshot_diff(
@@ -2857,14 +2924,13 @@ def snapshot_changes(
     manifest = _load_manifest(
         spark, table, to_v, committed=committed, branch=branch
     )
-    all_dirs = sorted(x for dirs in manifest["partitions"].values() for x in dirs)
-    if not all_dirs:
+    if not any(manifest["partitions"].values()):
         raise ValueError(
             f"snapshot v{to_v} of {table} is empty — no schema to derive a "
             "(possibly empty) delta frame from"
         )
     if not d["added"]:
-        return _read_dirs(spark, table, all_dirs, manifest).limit(0)
+        return _read_empty(spark, table, manifest)
     return _read_dirs(spark, table, d["added"], manifest)
 
 
@@ -4338,6 +4404,7 @@ def snapshot_delete_keys(
             "file": f"deletes/{del_id}",
             "cols": list(on),
             "dirs": sorted(cand_list),
+            "schema": _frame_cschema(kdf, None),
         },
         branch=branch,
     )

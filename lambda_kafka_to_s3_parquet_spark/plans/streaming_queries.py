@@ -15,6 +15,7 @@ sessionization pass but remain a single exchange on user_id.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +64,13 @@ def _drain(q, timeout: int = 300) -> None:
         raise TimeoutError(f"streaming query failed to drain within {timeout}s")
 
 
+#: Open :func:`_state_partitions` scopes, and the value the outermost
+#: one saved.
+_STATE_LOCK = threading.Lock()
+_STATE_DEPTH = 0
+_STATE_SAVED: str | None = None
+
+
 @contextmanager
 def _state_partitions(spark: SparkSession, n: int = 8):
     """Scope ``spark.sql.shuffle.partitions`` to the streaming run.
@@ -78,13 +86,27 @@ def _state_partitions(spark: SparkSession, n: int = 8):
     not apply inside streaming micro-batches, so the conf is the only
     lever. Restored on exit so batch plans in the same session keep the
     session's parallelism.
+
+    Scopes may overlap (a registered query runs a batch branch on a
+    second thread while its stream's scope is active), and the conf is
+    session-global (the engine runs one session per process): only the
+    OUTERMOST scope saves and restores the value — an inner scope saving
+    it would record the outer scope's temporary value as "old" and
+    restore that on exit.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    global _STATE_DEPTH, _STATE_SAVED
+    with _STATE_LOCK:
+        if _STATE_DEPTH == 0:
+            _STATE_SAVED = spark.conf.get("spark.sql.shuffle.partitions")
+        _STATE_DEPTH += 1
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        with _STATE_LOCK:
+            _STATE_DEPTH -= 1
+            if _STATE_DEPTH == 0:
+                spark.conf.set("spark.sql.shuffle.partitions", _STATE_SAVED)
 
 
 # --------------------------------------------------------------------------

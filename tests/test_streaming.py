@@ -1901,3 +1901,46 @@ def test_token_quota_stream_group_spanning_arrow_chunks(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     )
     assert kept == list(range(60))
+
+
+def test_overlapping_state_partition_scopes_restore_the_session_value(spark):
+    """Two ``_state_partitions`` scopes overlapping on two threads: the
+    first to exit must not restore the value while the other is open,
+    and after both exit the session holds its original value again (an
+    inner scope saving the outer's temporary value as "old" would leave
+    it behind)."""
+    import threading
+
+    from lambda_kafka_to_s3_parquet_spark.plans.streaming_queries import (
+        _state_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    first_in, second_in, first_out = (threading.Event() for _ in range(3))
+    seen = {}
+
+    def first():
+        with _state_partitions(spark, 5):
+            first_in.set()
+            second_in.wait(30)
+        first_out.set()
+
+    def second():
+        first_in.wait(30)
+        with _state_partitions(spark, 5):
+            second_in.set()
+            first_out.wait(30)
+            seen["after_first_exit"] = spark.conf.get(key)
+
+    try:
+        threads = [threading.Thread(target=f) for f in (first, second)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert seen == {"after_first_exit": "5"}
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, original)
