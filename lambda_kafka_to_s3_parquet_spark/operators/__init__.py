@@ -57,8 +57,6 @@ from .curate import curate_corpus, curate_with_audit  # noqa: F401
 from .ivm import incremental_view_refresh, read_view  # noqa: F401
 from .sink import (  # noqa: F401
     read_partition,
-    read_pruned,
-    read_zone_maps,
     with_partition_columns,
     write_clustered,
     write_partitioned,

@@ -40,12 +40,11 @@ from .dedup import latest_by_key
 
 # Shared maintenance plumbing (FS-API marker + emptiness probe): one
 # implementation for every continuously-maintained table in the engine.
-from .rollup import (  # noqa: F401  (re-exported for cdc tests)
+from .metafile import _fs_path, _read_text
+from .rollup import (
     _guard_no_inplace_data,
     _is_absent_or_empty,
     _maintenance_state,
-    _marker_fs,
-    _read_marker_state,
     _write_last_batch_id,
 )
 
@@ -394,8 +393,6 @@ def lookup_current_state(
         # n_buckets in the side-car marker's extra fields — read it raw
         # (no checkpoint-identity guard: the lookup only needs the
         # bucket contract, not the batch high-water mark)
-        from .snapshots import _read_text
-
         txt = _read_text(
             spark, os.path.join(path, "_last_merged_batch.json")
         )
@@ -508,7 +505,7 @@ def purge_tombstones(
     # Dynamic overwrite only replaces partitions PRESENT in the written
     # data — a bucket whose every row expired produces none and would keep
     # its old file forever. Drop those bucket dirs through the FS API.
-    fs, _ = _marker_fs(spark, path)
+    fs, _ = _fs_path(spark, path)
     for b in set(affected_ids) - surviving_ids:
         fs.delete(
             spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"bucket={b}")),

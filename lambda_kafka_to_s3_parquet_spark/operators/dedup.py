@@ -31,6 +31,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokens, word_shingles
+from .metafile import (
+    _fs_path,
+    _read_bytes,
+    _read_text,
+    _replace_text,
+    _write_in_place,
+)
 
 #: Modulus of the PORTABLE MinHash permutation family (Mersenne prime
 #: 2^31 - 1). Chosen so every intermediate of ``(a*h + b) % P`` fits a
@@ -796,17 +803,8 @@ def _store_meta(spark, store_path: str) -> dict | None:
     """Read the band store's meta file, or None when it doesn't exist."""
     import json
 
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{NEARDUP_STORE_META}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
+    txt = _read_text(spark, f"{store_path}/{NEARDUP_STORE_META}")
+    return None if txt is None else json.loads(txt)
 
 
 def _write_store_meta(spark, store_path: str, meta: dict) -> None:
@@ -821,23 +819,8 @@ def _write_store_meta(spark, store_path: str, meta: dict) -> None:
     single-writer and readers run in the same maintenance stream, so no
     reader races this by contract.)"""
     import json
-    import uuid
 
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{NEARDUP_STORE_META}")
-    fs2, tmp = _marker_fs(
-        spark, f"{store_path}/{NEARDUP_STORE_META}.tmp-{uuid.uuid4().hex}"
-    )
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(json.dumps(meta).encode("utf-8"))
-    finally:
-        stream.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"band-store meta publish failed for {store_path}")
+    _replace_text(spark, f"{store_path}/{NEARDUP_STORE_META}", json.dumps(meta))
 
 
 def _check_store_params(
@@ -890,9 +873,7 @@ def _existing_paths(spark, root: str, candidates: list[str], glob_tail: str) -> 
     which resolves existence with zero filesystem calls — both fs
     strategies here were measured growing with total dir count (glob:
     ~0.5 ms/dir on local fs, 0.8 s → 3 s at 10× store)."""
-    from .rollup import _marker_fs
-
-    fs, _ = _marker_fs(spark, root)
+    fs, _ = _fs_path(spark, root)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     if len(candidates) <= 48:
         return [p for p in candidates if fs.exists(jpath(p))]
@@ -928,9 +909,7 @@ def _bitmap_encode(bits: set[int], n_bits: int) -> str:
 
 def _store_has_data(spark, store_path: str) -> bool:
     """True iff either half of the store holds any partition dirs."""
-    from .rollup import _marker_fs
-
-    fs, _ = _marker_fs(spark, store_path)
+    fs, _ = _fs_path(spark, store_path)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     return fs.exists(jpath(f"{store_path}/bands")) or fs.exists(
         jpath(f"{store_path}/sigs")
@@ -941,9 +920,7 @@ def _probe_dir_registry(spark, store_path: str, n_bands: int, n_pfx: int) -> dic
     """Build the dir-registry bitmaps from the filesystem — one dir-level
     globStatus per store half (upgrade path for pre-registry stores; the
     hot path never calls this)."""
-    from .rollup import _marker_fs
-
-    fs, _ = _marker_fs(spark, store_path)
+    fs, _ = _fs_path(spark, store_path)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     band_bits: set[int] = set()
     for st in fs.globStatus(jpath(f"{store_path}/bands/band=*/pfx=*")) or []:
@@ -1360,9 +1337,7 @@ def _recover_rebucket(spark, store_path: str) -> bool:
     :func:`incremental_neardup_banded` — without this, a crashed swap
     would read as "absent store" and silently bootstrap empty (full
     history loss, the failure mode the module forbids)."""
-    from .rollup import _marker_fs
-
-    fs, canon = _marker_fs(spark, store_path)
+    fs, canon = _fs_path(spark, store_path)
     base = store_path.rstrip("/")
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     old_p = jpath(base + ".rebucket_old")
@@ -1409,8 +1384,6 @@ def rebucket_band_store(spark, store_path: str, n_pfx_new: int) -> None:
     reader's bootstrap probe) completes an interrupted swap instead of
     letting it read as an absent store.
     """
-    from .rollup import _marker_fs
-
     _recover_rebucket(spark, store_path)
     meta = _store_meta(spark, store_path)
     if meta is None:
@@ -1458,9 +1431,9 @@ def rebucket_band_store(spark, store_path: str, n_pfx_new: int) -> None:
     # delete and a rename would leave NO store at the canonical path and
     # the next batch would silently bootstrap empty. Here every crash
     # point leaves old or new recoverable (see _recover_rebucket).
-    fs, canon_p = _marker_fs(spark, store_path)
-    _, tmp_p = _marker_fs(spark, tmp)
-    _, old_p = _marker_fs(spark, store_path.rstrip("/") + ".rebucket_old")
+    fs, canon_p = _fs_path(spark, store_path)
+    _, tmp_p = _fs_path(spark, tmp)
+    _, old_p = _fs_path(spark, store_path.rstrip("/") + ".rebucket_old")
     if fs.exists(old_p):
         fs.delete(old_p, True)  # stale tail of a prior completed swap
     if not fs.rename(canon_p, old_p):
@@ -1711,17 +1684,8 @@ BLOOM_DELTA_FILE = "_bloom_delta.bin"
 def _gram_meta(spark, store_path: str) -> dict | None:
     import json
 
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{GRAM_STORE_META}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
+    txt = _read_text(spark, f"{store_path}/{GRAM_STORE_META}")
+    return None if txt is None else json.loads(txt)
 
 
 def _write_gram_meta(spark, store_path: str, meta: dict) -> None:
@@ -1729,51 +1693,25 @@ def _write_gram_meta(spark, store_path: str, meta: dict) -> None:
     registry (same protocol as the vector-index appends): an append's
     data dir is invisible until its entry lands here."""
     import json
-    import uuid
 
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{GRAM_STORE_META}")
-    _, tmp = _marker_fs(
-        spark, f"{store_path}/{GRAM_STORE_META}.tmp-{uuid.uuid4().hex}"
-    )
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(json.dumps(meta).encode("utf-8"))
-    finally:
-        stream.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"gram-store meta publish failed for {store_path}")
+    _replace_text(spark, f"{store_path}/{GRAM_STORE_META}", json.dumps(meta))
 
 
 def _read_bloom(spark, store_path: str, n_bits: int) -> np.ndarray:
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
-    if not fs.exists(p):
+    raw = _read_bytes(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
+    if raw is None:
         return np.zeros(n_bits // 8, dtype=np.uint8)
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
     return np.frombuffer(raw, dtype=np.uint8).copy()
 
 
 def _read_bloom_delta(spark, store_path: str, append_id: str) -> np.ndarray:
-    """The gkeys a registered L0 append added (its bloom delta)."""
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(
-        spark, f"{store_path}/appends/{append_id}/{BLOOM_DELTA_FILE}"
-    )
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
+    """The gkeys a registered L0 append added (its bloom delta). A
+    registered append whose delta is missing raises: reading it as empty
+    would drop its keys from the composite bloom."""
+    path = f"{store_path}/appends/{append_id}/{BLOOM_DELTA_FILE}"
+    raw = _read_bytes(spark, path)
+    if raw is None:
+        raise FileNotFoundError(f"bloom delta of registered append missing: {path}")
     return np.frombuffer(raw, dtype=np.int64).copy()
 
 
@@ -1786,16 +1724,11 @@ def _write_bloom_delta(
     costs I/O ∝ store (measured: 0.34 s py4j write + 1.35 s numpy
     popcount on a 21 MB bloom at a 10× store — the round-8 w13 stress
     inflation); the delta is a few KB regardless of store size."""
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(
-        spark, f"{store_path}/appends/{append_id}/{BLOOM_DELTA_FILE}"
+    _write_in_place(
+        spark,
+        f"{store_path}/appends/{append_id}/{BLOOM_DELTA_FILE}",
+        np.ascontiguousarray(gkeys, dtype=np.int64).tobytes(),
     )
-    stream = fs.create(p, True)
-    try:
-        stream.write(np.ascontiguousarray(gkeys, dtype=np.int64).tobytes())
-    finally:
-        stream.close()
 
 
 def _load_bloom(spark, store_path: str, meta: dict) -> np.ndarray:
@@ -1832,23 +1765,7 @@ def _popcount(arr: np.ndarray) -> int:
 
 
 def _write_bloom(spark, store_path: str, arr: np.ndarray) -> None:
-    import uuid
-
-    from .rollup import _marker_fs
-
-    fs, p = _marker_fs(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
-    _, tmp = _marker_fs(
-        spark, f"{store_path}/{GRAM_STORE_BLOOM}.tmp-{uuid.uuid4().hex}"
-    )
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(arr.tobytes())
-    finally:
-        stream.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"gram-store bloom publish failed for {store_path}")
+    _replace_text(spark, f"{store_path}/{GRAM_STORE_BLOOM}", arr.tobytes())
 
 
 #: odd 64-bit mix constant (splitmix64's golden-gamma) for double hashing
@@ -1991,10 +1908,8 @@ def incremental_duplicated_spans(
         # would silently orphan all history (the bloom still answers
         # 'maybe' but appends=[] skips every store read). Fail-stop,
         # same as rollup._read_marker_state / load_pq_index.
-        from .rollup import _marker_fs
-
-        fs, bloom_p = _marker_fs(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
-        _, appends_p = _marker_fs(spark, f"{store_path}/appends")
+        fs, bloom_p = _fs_path(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
+        _, appends_p = _fs_path(spark, f"{store_path}/appends")
         if fs.exists(bloom_p) or fs.exists(appends_p):
             raise ValueError(
                 f"gram store {store_path} has data (bloom/appends present) "

@@ -1,0 +1,107 @@
+"""Small metadata files on any Hadoop filesystem — one implementation of
+each protocol the engine publishes its metadata through.
+
+* :func:`_read_bytes` / :func:`_read_text` — one open-and-catch round
+  trip; ``None`` when the file is absent.
+* :func:`_write_in_place` — a plain overwrite at the final name. A crash
+  mid-write can leave the file torn; its readers must fail stop on a
+  parse error, never read it as absent.
+* :func:`_create_atomic` — tmp + rename to a FRESH name: the
+  compare-and-swap. Rename-to-existing fails on every Hadoop filesystem,
+  so exactly one of N racing creators wins.
+* :func:`_replace_text` — tmp + delete + rename: overwrite semantics
+  with no torn state, but a short window with no file at all (see its
+  docstring for what readers must guard).
+
+All three writers take ``str`` (written as UTF-8) or ``bytes``. Paths
+resolve through :func:`_fs_path`, so every protocol works on any
+supported scheme (local, hdfs, s3a). No package imports: every module
+may import this one.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+
+def _fs_path(spark, path: str):
+    """Hadoop FileSystem + Path for ``path`` — resolved through the JVM so
+    metadata works on any supported scheme (local, hdfs, s3a) exactly
+    like the tables beside it, not just local disk."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _read_bytes(spark, path: str) -> bytes | None:
+    """Read a small metadata file; ``None`` when absent. Open-and-catch
+    rather than exists()+open: metadata reads are the driver's hot loop
+    and the pre-check doubles the filesystem round-trips (it is also a
+    TOCTOU no-op — the open can still race a delete either way)."""
+    fs, p = _fs_path(spark, path)
+    try:
+        stream = fs.open(p)
+    except Exception as e:
+        if "FileNotFoundException" in str(e):
+            return None
+        raise
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def _read_text(spark, path: str) -> str | None:
+    """:func:`_read_bytes` decoded as UTF-8."""
+    raw = _read_bytes(spark, path)
+    return None if raw is None else raw.decode("utf-8")
+
+
+def _write_stream(fs, hpath, content: str | bytes) -> None:
+    data = content.encode("utf-8") if isinstance(content, str) else content
+    stream = fs.create(hpath, True)
+    try:
+        stream.write(data)
+    finally:
+        stream.close()
+
+
+def _write_in_place(spark, path: str, content: str | bytes) -> None:
+    """Overwrite ``path`` directly. Used where a missing file would be
+    worse than a torn one: a torn file fails its reader's parse (stop),
+    while an absent one can read as "nothing there yet"."""
+    fs, p = _fs_path(spark, path)
+    _write_stream(fs, p, content)
+
+
+def _create_atomic(spark, path: str, content: str | bytes) -> None:
+    """Write via temp file + rename to a FRESH destination (never an
+    overwrite) — atomic on every Hadoop filesystem. Used for the
+    visibility markers, whose names are unique by construction, and for
+    manifests written into fresh dirs. Raises ``OSError`` when the
+    destination already exists (the CAS loss)."""
+    fs, final = _fs_path(spark, path)
+    tmp = final.suffix(f".tmp-{uuid.uuid4().hex}")
+    _write_stream(fs, tmp, content)
+    if not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        raise IOError(f"atomic create failed for {path} (already exists?)")
+
+
+def _replace_text(spark, path: str, content: str | bytes) -> None:
+    """Write with OVERWRITE semantics (tmp + delete-dest + rename). Every
+    crash point leaves the old content, the new content, or — between
+    the delete and the rename — NO file at ``path`` (rename-to-existing
+    fails on HDFS/S3A, so the old file must go first). That window is
+    the condition every reader of a replaced file must guard: an absent
+    file beside data that needs it is a crashed publish, never "empty"
+    (the gram store, band store and ``load_pq_index`` fail stop on it).
+    Used for the single-writer registries that are rewritten in place:
+    the band/gram store metas, the gram-store bloom and the index
+    metas."""
+    fs, final = _fs_path(spark, path)
+    tmp = final.suffix(f".tmp-{uuid.uuid4().hex}")
+    _write_stream(fs, tmp, content)
+    fs.delete(final, False)
+    if not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        raise IOError(f"replace failed for {path}")

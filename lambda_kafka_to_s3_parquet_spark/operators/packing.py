@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .metafile import _create_atomic
+
 
 def with_global_prefix_sum(
     df: DataFrame,
@@ -282,14 +284,7 @@ def export_shards(
         "max_shard_id": int(max_id),
         "shards": stats,
     }
-    spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{path}/_shards.json"), True)
-    try:
-        out.write(bytearray(_json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
+    # fresh-name create: the dir is new (errorifexists), so a crash
+    # leaves either no manifest or a whole one, never a torn one
+    _create_atomic(df.sparkSession, f"{path}/_shards.json", _json.dumps(manifest))
     return manifest

@@ -533,8 +533,8 @@ def compact_bm25_index(spark, path: str, clean: bool = True) -> dict:
     superseded dirs are deleted best-effort (``clean=False`` keeps
     them). Single-maintainer, run at a quiesce point (a reader of the
     PREVIOUS meta may still scan the old dirs). No appends = no-op."""
+    from .metafile import _fs_path
     from .vector_index import _base_root, _read_index_meta, _write_index_meta
-    from .rollup import _marker_fs
 
     meta = _read_index_meta(spark, path)
     if meta is None:
@@ -592,17 +592,17 @@ def compact_bm25_index(spark, path: str, clean: bool = True) -> dict:
         new_meta["base_batch_id"] = max(folded_ids)
     _write_index_meta(spark, path, new_meta)
     if clean:
-        fs, _ = _marker_fs(spark, path)
+        fs, _ = _fs_path(spark, path)
         if old_base != path:
-            _, oldp = _marker_fs(spark, old_base)
+            _, oldp = _fs_path(spark, old_base)
             if fs.exists(oldp):
                 fs.delete(oldp, True)
         else:
-            _, oldd = _marker_fs(spark, f"{path}/tf")
+            _, oldd = _fs_path(spark, f"{path}/tf")
             if fs.exists(oldd):
                 fs.delete(oldd, True)
         for a in appends:
-            _, ap = _marker_fs(spark, f"{path}/appends/{a['id']}")
+            _, ap = _fs_path(spark, f"{path}/appends/{a['id']}")
             if fs.exists(ap):
                 fs.delete(ap, True)
     return new_meta

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .metafile import _fs_path, _read_text, _write_in_place
+
 #: THE mergeable-aggregate spec — the one place the rollup schema contract
 #: lives. Each column name maps to (build, merge):
 #:   * build(raw events)     -> the per-bucket partial  (hourly_rollup)
@@ -227,7 +229,7 @@ def _is_absent_or_empty(spark: SparkSession, path: str) -> bool:
     ``.crc``) don't count as data — Spark's parquet reader ignores them
     too, so this matches exactly the set of files a read would load.
     """
-    fs, p = _marker_fs(spark, path)
+    fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return True
     for status in fs.listStatus(p):
@@ -240,7 +242,7 @@ def _guard_no_inplace_data(spark: SparkSession, path: str) -> None:
     """Raise when ``path`` holds in-place (bucket=N / d=...) data but no
     snapshot metadata: flipping a stream to commit_protocol='snapshot'
     must be an explicit migration, never a silent restart from empty."""
-    fs, p = _marker_fs(spark, path)
+    fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return
     for status in fs.listStatus(p):
@@ -253,16 +255,6 @@ def _guard_no_inplace_data(spark: SparkSession, path: str) -> None:
                 "state into a fresh path (or rebuild), then point the "
                 "stream there."
             )
-
-
-def _marker_fs(spark: SparkSession, marker: str):
-    """Hadoop FileSystem + Path for the high-water-mark file — resolved
-    through the JVM so the marker works on any supported scheme (local,
-    hdfs, s3a) exactly like the rollup table itself, not just local disk."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
 
 
 def _read_marker_state(spark: SparkSession, marker: str, checkpoint: str) -> dict | None:
@@ -285,15 +277,10 @@ def _read_marker_state(spark: SparkSession, marker: str, checkpoint: str) -> dic
     CDC current state); table-specific parameters recorded at write time
     (e.g. the CDC bucket count) ride the same dict.
     """
-    fs, path = _marker_fs(spark, marker)
-    if not fs.exists(path):
+    txt = _read_text(spark, marker)
+    if txt is None:
         return None
-    stream = fs.open(path)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    state = json.loads(raw.decode("utf-8"))
+    state = json.loads(txt)
     _validate_state_checkpoint(state, marker, checkpoint)
     return state
 
@@ -348,16 +335,14 @@ def _write_last_batch_id(
     checkpoint: str,
     extra: dict | None = None,
 ) -> None:
-    fs, path = _marker_fs(spark, marker)
-    stream = fs.create(path, True)  # overwrite
-    try:
-        stream.write(
-            json.dumps(
-                {"batch_id": batch_id, "checkpoint": checkpoint, **(extra or {})}
-            ).encode("utf-8")
-        )
-    finally:
-        stream.close()
+    # In place, never replaced: a replace's delete→rename window would
+    # leave the marker absent, which reads as "no batch applied" and
+    # re-merges every batch; a torn marker fails stop instead.
+    _write_in_place(
+        spark,
+        marker,
+        json.dumps({"batch_id": batch_id, "checkpoint": checkpoint, **(extra or {})}),
+    )
 
 
 def run_rollup_stream(

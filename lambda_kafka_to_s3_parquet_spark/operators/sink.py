@@ -80,25 +80,11 @@ def write_partitioned(
     key_col: str = "SRC_KEY_VAL",
     mode: str = "append",
     granularity: str = "hour",
-    stats_cols: list[str] | None = None,
 ) -> WriteMetrics:
     """Land a decoded batch under the Hive-partitioned layout, observed.
 
     One job: the observation rides the write (no second scan of the
-    batch). Returns the v2 handler's filename metrics as a struct.
-
-    ``stats_cols`` publishes per-partition ZONE MAPS (min/max of each
-    stat column) into the table's ``_zone_maps.json`` sidecar — the same
-    data-skipping statistic the snapshot manifests carry, for plain
-    sink tables. Stats are derived from the BATCH itself (one extra
-    batch-sized groupBy on the partition tuple, never a table rescan)
-    and MERGE-WIDEN into existing entries on append, so they stay a
-    superset of every stats-aware write. :func:`read_pruned` consumes
-    them. Contract: a writer that bypasses ``stats_cols`` leaves its
-    partitions' entries stale-but-WIDER-only if it only appends rows
-    inside existing bounds; to stay safe, route every writer of a
-    stats-bearing table through this function (a bypassed write is why
-    readers must — and do — treat absent entries conservatively)."""
+    batch). Returns the v2 handler's filename metrics as a struct."""
     pcols = list(partition_cols(granularity))
     obs = Observation("write_metrics")
     observed = df.observe(
@@ -106,14 +92,6 @@ def write_partitioned(
         F.count(F.lit(1)).alias("total"),
         F.approx_count_distinct(key_col).alias("distinct_keys"),
     )
-    # Zone maps are widened BEFORE the data lands: bounds only ever grow,
-    # so a pre-widened entry is always conservative — a crash between the
-    # two steps leaves bounds wider than the data (harmless extra reads).
-    # The old write-then-widen order left an existing entry NARROWER than
-    # the partition after a crash, silently skipping matching rows on
-    # read (round-9 advice, medium).
-    if stats_cols:
-        _merge_partition_stats(df, path, pcols, stats_cols, granularity)
     observed.write.mode(mode).partitionBy(*pcols).parquet(path)
     got = obs.get
     return WriteMetrics(int(got["total"]), int(got["distinct_keys"]))
@@ -217,7 +195,6 @@ def write_clustered(
     cluster_cols: list[str],
     n_files: int = 8,
     mode: str = "overwrite",
-    stats_cols: list[str] | None = None,
 ) -> None:
     """Write parquet clustered (range-partitioned + sorted) on columns.
 
@@ -237,27 +214,15 @@ def write_clustered(
     Hilbert) keys beat lexicographic sorting, and this writer accepts a
     precomputed interleave expression as a cluster column for that case.
 
-    ``stats_cols`` publishes per-FILE zone maps into ``_zone_maps.json``
-    (file granularity — the clustered layout writes one flat dir, so
-    dir-level stats would be vacuous), collected by reading back the
-    just-written files grouped on ``_metadata.file_path`` (one
-    write-sized scan, the snapshot manifests' collection tactic).
-    Requires ``mode="overwrite"``: the sidecar then lists EXACTLY the
-    table's files ("complete"), so :func:`read_pruned` may scan only
-    surviving paths."""
-    if stats_cols and mode != "overwrite":
-        raise ValueError(
-            "write_clustered stats_cols requires mode='overwrite' — the "
-            "file-level sidecar must be the complete registry of the dir"
-        )
+    Tables that also need recorded zone maps use the snapshot form of
+    the same layout: ``snapshot_overwrite_all(order_by=…, stats_cols=…)``
+    read through ``snapshot_read(skip_where=…)``."""
     (
         df.repartitionByRange(n_files, *[F.col(c) for c in cluster_cols])
         .sortWithinPartitions(*cluster_cols)
         .write.mode(mode)
         .parquet(path)
     )
-    if stats_cols:
-        _publish_file_stats(df.sparkSession, path, stats_cols)
 
 
 def files_touched(df: DataFrame) -> int:
@@ -294,289 +259,3 @@ def interleave_bits(a, b, bits: int = 21):
             F.shiftleft(bbit, 2 * i + 1)
         )
     return key
-
-
-# ---------------------------------------------------------------------------
-# Zone maps for PLAIN sink tables (no snapshot manifest): the same per-unit
-# min/max data-skipping stats that `operators/snapshots._collect_dir_pruning`
-# (the one read-back pass that builds zone maps and blooms together)
-# publishes into manifests, as a `_zone_maps.json` sidecar at the table
-# root — partition-tuple granularity for the hive-partitioned sink,
-# file granularity for the clustered/Z-ordered layout writers. Readers go
-# through `read_pruned`, which is CONSERVATIVE by construction: it only
-# EXCLUDES units whose recorded range provably cannot match — anything
-# unknown (a dir written without stats, a missing sidecar) is read.
-# skip_where never implements the predicate; callers still apply the real
-# filter, exactly as with `snapshot_read`.
-# ---------------------------------------------------------------------------
-
-ZONE_MAP_FILE = "_zone_maps.json"  # legacy unversioned name, still readable
-_ZONE_MAP_RE = None  # compiled lazily (module imports stay light)
-
-
-def _zone_map_versions(spark: SparkSession, path: str):
-    """(fs, jvm-Path factory, {version: filename}) for the table's
-    versioned ``_zone_maps.v<N>.json`` sidecars. The legacy unversioned
-    file reads as version 0 when no versioned sidecar exists."""
-    import re
-
-    from .rollup import _marker_fs
-
-    global _ZONE_MAP_RE
-    if _ZONE_MAP_RE is None:
-        _ZONE_MAP_RE = re.compile(r"^_zone_maps\.v(\d+)\.json$")
-    fs, root = _marker_fs(spark, path)
-    versions: dict[int, str] = {}
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            m = _ZONE_MAP_RE.match(name)
-            if m:
-                versions[int(m.group(1))] = name
-    return fs, versions
-
-
-def _read_zone_maps_versioned(spark: SparkSession, path: str) -> tuple[dict, int]:
-    """(sidecar dict, version) — the MAX versioned sidecar, falling back
-    to the legacy unversioned file as version 0; ({}, 0) when none."""
-    import json
-
-    from .rollup import _marker_fs
-
-    fs, versions = _zone_map_versions(spark, path)
-    if versions:
-        v = max(versions)
-        _, p = _marker_fs(spark, f"{path}/{versions[v]}")
-    else:
-        v = 0
-        _, p = _marker_fs(spark, f"{path}/{ZONE_MAP_FILE}")
-        if not fs.exists(p):
-            return {}, 0
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8")), v
-
-
-def read_zone_maps(spark: SparkSession, path: str) -> dict:
-    """The table's zone-map sidecar, or {} when none was ever published."""
-    return _read_zone_maps_versioned(spark, path)[0]
-
-
-def _publish_zone_maps_cas(
-    spark: SparkSession, path: str, maps: dict, base_version: int
-) -> bool:
-    """Compare-and-swap publish: land ``maps`` as version
-    ``base_version + 1`` via tmp + rename to a FRESH name (atomic on
-    every Hadoop filesystem; rename-to-existing fails). Returns False
-    when another writer already published that version — the caller
-    re-reads THEIR state and re-merges, so no widening is ever lost
-    (the round-10 advice: the old read-compare-replace narrowed but
-    never closed the lost-update window; a fresh-name rename closes
-    it the same way the snapshot markers do). Older versions and the
-    legacy unversioned file are best-effort deleted after a win."""
-    import json
-    import uuid
-
-    from .rollup import _marker_fs
-
-    target = f"{path}/_zone_maps.v{base_version + 1:05d}.json"
-    fs, final = _marker_fs(spark, target)
-    if fs.exists(final):
-        return False  # fast-path loss
-    _, tmp = _marker_fs(spark, f"{target}.tmp-{uuid.uuid4().hex}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(json.dumps(maps).encode("utf-8"))
-    finally:
-        stream.close()
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        return False  # lost the CAS to a concurrent writer
-    _, versions = _zone_map_versions(spark, path)
-    for v, name in versions.items():
-        if v <= base_version:
-            _, old = _marker_fs(spark, f"{path}/{name}")
-            fs.delete(old, False)
-    _, legacy = _marker_fs(spark, f"{path}/{ZONE_MAP_FILE}")
-    fs.delete(legacy, False)
-    return True
-
-
-def _write_zone_maps(spark: SparkSession, path: str, maps: dict) -> None:
-    """Unconditional publish (single-writer overwrite paths — the
-    clustered-layout writers, whose data write itself isn't concurrent-
-    safe): retries the CAS from the latest version until it lands."""
-    for _ in range(25):
-        _, v = _read_zone_maps_versioned(spark, path)
-        if _publish_zone_maps_cas(spark, path, maps, v):
-            return
-    raise OSError(f"zone-map publish failed for {path}")
-
-
-def _norm_stat(v):
-    """JSON-comparable bound: numbers as-is, everything else via str
-    (ISO timestamps/dates order lexicographically) — the snapshot
-    manifests' normalization, shared by the read-side overlap test."""
-    if isinstance(v, bool) or v is None:
-        return None if v is None else str(v)
-    return v if isinstance(v, (int, float)) else str(v)
-
-
-def _merge_partition_stats(
-    df: DataFrame,
-    path: str,
-    pcols: list[str],
-    stats_cols: list[str],
-    granularity: str,
-) -> None:
-    """Fold the batch's per-partition-tuple min/max into the sidecar.
-
-    Stats come from the BATCH (it carries its partition columns), keyed
-    by the partition VALUE tuple — never by reconstructed hive dir names
-    (null-encoding/URL-escaping drift risk; the reader prunes by VALUES
-    through ordinary partition pruning, so paths are never needed).
-    Append mode widens existing bounds; bounds only ever grow, so the
-    sidecar stays a superset of all stats-aware writes.
-
-    Concurrent writers: the publish is a real COMPARE-AND-SWAP — each
-    attempt lands as a FRESH versioned sidecar name (rename-to-existing
-    fails atomically, the snapshot-marker primitive), so a racing
-    writer's widening can never be silently clobbered: the loser
-    re-reads the winner's published state and re-merges from it
-    (round-10 advice — the old read-compare-replace narrowed but never
-    closed the lost-update window). Every CAS loss means some OTHER
-    writer made progress, so the retry bound is a storm diagnostic,
-    not a livelock risk; exhausting it fails BEFORE the data lands,
-    which is the safe side (bounds pre-widen before data — see
-    write_partitioned)."""
-    spark = df.sparkSession
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = df.groupBy(*pcols).agg(*aggs).collect()
-
-    import json
-
-    for _attempt in range(25):
-        maps, ver = _read_zone_maps_versioned(spark, path)
-        if maps and maps.get("kind") != "partitions":
-            raise ValueError(
-                f"{path} carries {maps.get('kind')!r} zone maps; cannot "
-                "merge partition-tuple stats into a file-granularity sidecar"
-            )
-        entries = {k: dict(v) for k, v in maps.get("entries", {}).items()}
-        for r in rows:
-            key = json.dumps([_norm_stat(r[c]) for c in pcols])
-            cur = entries.get(key, {})
-            for c in stats_cols:
-                lo, hi = _norm_stat(r[f"_lo_{c}"]), _norm_stat(r[f"_hi_{c}"])
-                if lo is None or hi is None:
-                    cur.pop(c, None)  # all-null batch column: no claim
-                    continue
-                if c in cur:
-                    cur[c] = [min(cur[c][0], lo), max(cur[c][1], hi)]
-                else:
-                    cur[c] = [lo, hi]
-            entries[key] = cur
-        if _publish_zone_maps_cas(
-            spark,
-            path,
-            {"kind": "partitions", "pcols": pcols,
-             "granularity": granularity, "entries": entries},
-            ver,
-        ):
-            return
-    raise OSError(
-        f"zone-map merge for {path} lost the CAS 25 times — concurrent "
-        "writer storm; serialize writers (each loss means another writer "
-        "published, so no widening was lost)"
-    )
-
-
-def _publish_file_stats(spark: SparkSession, path: str, stats_cols: list[str]) -> None:
-    """Per-file zone maps for a just-overwritten flat dir, read back from
-    the files themselves via ``_metadata.file_path`` (never re-derived)."""
-    df = spark.read.parquet(path)
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = (
-        df.withColumn("_f", F.expr("regexp_replace(_metadata.file_path, '^.*/', '')"))
-        .groupBy("_f")
-        .agg(*aggs)
-        .collect()
-    )
-    entries = {}
-    for r in rows:
-        stats = {}
-        for c in stats_cols:
-            lo, hi = _norm_stat(r[f"_lo_{c}"]), _norm_stat(r[f"_hi_{c}"])
-            if lo is not None and hi is not None:
-                stats[c] = [lo, hi]
-        entries[r["_f"]] = stats
-    _write_zone_maps(
-        spark, path, {"kind": "files", "complete": True, "entries": entries}
-    )
-
-
-def read_pruned(
-    spark: SparkSession, path: str, skip_where: list[tuple] | None = None
-) -> DataFrame:
-    """Zone-map-pruned scan of a plain sink table (the `snapshot_read
-    (skip_where=…)` shape for tables without a manifest).
-
-    ``skip_where=[(col, lo, hi), …]``: units whose recorded [min, max]
-    for ``col`` cannot intersect [lo, hi] are dropped from the scan —
-    partition-tuple units via an EXCLUSION predicate on the partition
-    columns (ordinary Catalyst partition pruning drops their dirs at
-    planning; dirs absent from the sidecar are untouched by the
-    exclusion and therefore read: conservative without ever listing),
-    file units by scanning only surviving paths (sound because the
-    file sidecar is the complete registry of an overwrite). The caller
-    still applies the real filter — pruning only shrinks the scan."""
-    df = spark.read.parquet(path)
-    if not skip_where:
-        return df
-    maps = read_zone_maps(spark, path)
-    if not maps:
-        return df
-
-    def disjoint(stats: dict) -> bool:
-        for col, lo, hi in skip_where:
-            if col in stats:
-                dlo, dhi = stats[col]
-                if _norm_stat(lo) > dhi or _norm_stat(hi) < dlo:
-                    return True
-        return False
-
-    import json
-
-    if maps["kind"] == "partitions":
-        pcols = maps["pcols"]
-        excluded = [
-            json.loads(k) for k, stats in maps["entries"].items() if disjoint(stats)
-        ]
-        if not excluded:
-            return df
-        # ONE NOT(OR(...)) predicate, not a chained filter per tuple —
-        # thousands of excluded partitions otherwise stack thousands of
-        # Filter nodes into the plan before the collapse rule sees them
-        exclusion = None
-        for vals in excluded:
-            cond = F.lit(True)
-            for c, v in zip(pcols, vals):
-                cond = cond & (
-                    F.col(c).isNull() if v is None
-                    else (F.col(c).cast("string") == F.lit(str(v)))
-                )
-            exclusion = cond if exclusion is None else (exclusion | cond)
-        return df.filter(~exclusion)
-
-    # file granularity: scan only surviving paths
-    keep = [f for f, stats in maps["entries"].items() if not disjoint(stats)]
-    if not keep:
-        return df.limit(0)
-    return spark.read.parquet(*[f"{path}/{f}" for f in keep])

@@ -97,6 +97,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, _parse_datatype_string
 
+# Module-level names on purpose: monkeypatching them here intercepts
+# every snapshot commit and read (_replace_text is re-exported for
+# callers that rewrite a manifest in place).
+from .metafile import _create_atomic, _read_text, _replace_text  # noqa: F401
+
 _SNAP_DIR = "_snapshots"
 _MARKER_RE = re.compile(r"^latest-(\d+)$")
 #: legacy fixed-name manifests (pre-CAS layout) + CAS token manifests
@@ -118,63 +123,6 @@ def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _read_text(spark, path: str) -> str | None:
-    """Read a small metadata file; ``None`` when absent. Open-and-catch
-    rather than exists()+open: metadata reads are the driver's hot loop
-    and the pre-check doubles the filesystem round-trips (it is also a
-    TOCTOU no-op — the open can still race a delete either way)."""
-    fs, jvm = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    try:
-        stream = fs.open(p)
-    except Exception as e:
-        if "FileNotFoundException" in str(e):
-            return None
-        raise
-    try:
-        return bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def _create_atomic(spark, path: str, content: str) -> None:
-    """Write via temp file + rename to a FRESH destination (never an
-    overwrite) — atomic on every Hadoop filesystem. Used for the
-    visibility markers, whose names are unique by construction."""
-    fs, jvm = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + f".tmp-{uuid.uuid4().hex}")
-    final = jvm.org.apache.hadoop.fs.Path(path)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(content.encode("utf-8")))
-    finally:
-        stream.close()
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        raise IOError(f"atomic create failed for {path} (already exists?)")
-
-
-def _replace_text(spark, path: str, content: str) -> None:
-    """Write with OVERWRITE semantics (tmp + delete-dest + rename). Used
-    for manifests: their visibility point is the marker, not the file —
-    an uncommitted manifest is invisible (phantom guard), so replacing
-    one is safe, and a crashed commit's retry MUST be able to rewrite
-    the phantom its predecessor left (rename-to-existing fails on
-    HDFS/S3A; refusing would wedge the table forever)."""
-    fs, jvm = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + f".tmp-{uuid.uuid4().hex}")
-    final = jvm.org.apache.hadoop.fs.Path(path)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(content.encode("utf-8")))
-    finally:
-        stream.close()
-    fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        raise IOError(f"replace failed for {path}")
 
 
 def _now() -> float:
@@ -317,12 +265,12 @@ def _publish_cas(
 ) -> bool:
     """The commit CAS: atomically create ``version``'s marker naming the
     manifest file. Exactly one of N racing writers succeeds (fresh-path
-    rename fails on an existing destination on every Hadoop FS — the
-    same primitive the zone-map sidecar's versioned publish uses).
-    Returns False when the marker already exists (this writer LOST);
-    re-raises real I/O failures. Markers are retained per version — they
-    are the version→file map time travel resolves through — until
-    :func:`snapshot_expire` reclaims them with their manifests."""
+    rename fails on an existing destination on every Hadoop FS; see
+    :func:`.metafile._create_atomic`). Returns False when the marker
+    already exists (this writer LOST); re-raises real I/O failures.
+    Markers are retained per version — they are the version→file map
+    time travel resolves through — until :func:`snapshot_expire`
+    reclaims them with their manifests."""
     marker = _marker_path(table, version, branch=branch)
     try:
         _create_atomic(spark, marker, basename)

@@ -45,47 +45,23 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .metafile import _fs_path, _read_text, _replace_text
 from .similarity import _kmeans_cells, pq_encode, topk_ivf, topk_pq_adc, train_pq_codebooks
 
 #: meta filename — underscore-prefixed so parquet readers ignore it
 VECTOR_INDEX_META = "_vector_index_meta.json"
 
 
-def _meta_path(spark: SparkSession, path: str):
-    from .rollup import _marker_fs
-
-    return _marker_fs(spark, f"{path}/{VECTOR_INDEX_META}")
-
-
 def _read_index_meta(spark: SparkSession, path: str) -> dict | None:
-    fs, p = _meta_path(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
+    txt = _read_text(spark, f"{path}/{VECTOR_INDEX_META}")
+    return None if txt is None else json.loads(txt)
 
 
 def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
     """Atomic publish (tmp + delete + rename), written AFTER the data —
     the meta IS the commit: no meta, no index (same protocol as the band
     store's meta and the snapshot manifests)."""
-    fs, p = _meta_path(spark, path)
-    from .rollup import _marker_fs
-
-    _, tmp = _marker_fs(spark, f"{path}/{VECTOR_INDEX_META}.tmp-{uuid.uuid4().hex}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(json.dumps(meta).encode("utf-8"))
-    finally:
-        stream.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise OSError(f"vector-index meta publish failed for {path}")
+    _replace_text(spark, f"{path}/{VECTOR_INDEX_META}", json.dumps(meta))
 
 
 def _base_root(path: str, meta: dict) -> str:
@@ -821,8 +797,6 @@ def compact_index(spark: SparkSession, path: str, clean: bool = True) -> dict:
     unchanged. BM25 indexes compact via
     ``retrieval.compact_bm25_index`` (same protocol + batch-id
     high-water mark)."""
-    from .rollup import _marker_fs
-
     meta = _read_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"{path} has no vector-index meta file")
@@ -874,18 +848,17 @@ def compact_index(spark: SparkSession, path: str, clean: bool = True) -> dict:
         )
     _write_index_meta(spark, path, new_meta)
     if clean:
-        fs, _ = _meta_path(spark, path)
-        _, oldp = _marker_fs(spark, old_base)
+        fs, oldp = _fs_path(spark, old_base)
         if old_base != path and fs.exists(oldp):
             fs.delete(oldp, True)
         else:
             # legacy layout: the old base is <path>/codes|cells itself
             sub = "codes" if kind == "pq" else "cells"
-            _, oldd = _marker_fs(spark, f"{path}/{sub}")
+            _, oldd = _fs_path(spark, f"{path}/{sub}")
             if fs.exists(oldd):
                 fs.delete(oldd, True)
         for a in appends:
-            _, ap = _marker_fs(spark, f"{path}/appends/{a['id']}")
+            _, ap = _fs_path(spark, f"{path}/appends/{a['id']}")
             if fs.exists(ap):
                 fs.delete(ap, True)
     return new_meta
@@ -906,16 +879,14 @@ def vacuum_index(spark: SparkSession, path: str) -> dict:
     dir is indistinguishable from an orphan (the snapshot_expire
     contract). Returns ``{"appends_deleted": n, "bases_deleted": m}``.
     """
-    from .rollup import _marker_fs
-
     meta = _read_index_meta(spark, path)
     if meta is None:
         raise ValueError(f"{path} has no index meta file")
     live_appends = {a["id"] for a in meta.get("appends", [])}
     live_base = meta.get("base")  # None = legacy layout (codes/cells/tf)
-    fs, root = _marker_fs(spark, path)
+    fs, root = _fs_path(spark, path)
     n_app = n_base = 0
-    _, appends_root = _marker_fs(spark, f"{path}/appends")
+    _, appends_root = _fs_path(spark, f"{path}/appends")
     if fs.exists(appends_root):
         for st in fs.listStatus(appends_root):
             name = st.getPath().getName()

@@ -564,9 +564,9 @@ def run_bm25_index_stream(
             # crashed before its meta swap — invisible to every reader,
             # safe to clear under the single-maintainer contract (and
             # the build's errorifexists would otherwise wedge the replay)
-            from ..operators.rollup import _marker_fs
+            from ..operators.metafile import _fs_path
 
-            fs, tfp = _marker_fs(spark, f"{index_path}/tf")
+            fs, tfp = _fs_path(spark, f"{index_path}/tf")
             if fs.exists(tfp):
                 fs.delete(tfp, True)
             build_bm25_index(

@@ -24,3 +24,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT
+
+
+def jobs_in(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs, on ANY thread: snapshot
+    scans are built on a driver thread pool, outside the caller's job
+    group, so a job-group count would miss them."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    fn()
+    return dag.numTotalJobs() - before

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,24 +25,12 @@ from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
     snapshot_read,
 )
 
+from .conftest import jobs_in as _jobs_in
+
 
 @pytest.fixture()
 def table(tmp_path):
     return str(tmp_path / "tbl")
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs ``fn`` runs on this thread, counted through a job
-    group and the status tracker once the listener bus has drained."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _two_partition_frame(spark):

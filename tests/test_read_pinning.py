@@ -30,19 +30,12 @@ from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
     snapshot_rename_column,
 )
 
+from .conftest import jobs_in as _jobs_in
+
 
 @pytest.fixture()
 def table(tmp_path):
     return str(tmp_path / "tbl")
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs submitted while ``fn`` runs, on ANY thread: scans are
-    built on a driver thread pool, outside the caller's job group."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.numTotalJobs()
-    fn()
-    return dag.numTotalJobs() - before
 
 
 def _ten_commit_table(spark, table):

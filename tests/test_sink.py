@@ -315,207 +315,3 @@ def test_write_clustered_sorts_within_files(spark, tmp_path):
     spans = sorted((min(v), max(v)) for v in by_file.values())
     for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert hi1 <= lo2
-
-
-def test_sink_zone_maps_partitioned(spark, tmp_path):
-    """Plain-sink zone maps, partition granularity: stats-driven skipping
-    via read_pruned must (a) touch strictly fewer files than the raw
-    scan for a disjoint-range probe, (b) never lose rows for an
-    overlapping probe, (c) WIDEN on append (the appended values' range
-    is honored), and (d) read statless partitions conservatively."""
-    from lambda_kafka_to_s3_parquet_spark.operators.sink import (
-        files_touched,
-        read_pruned,
-        read_zone_maps,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "t")
-    rows = [(i, "t1", 2021, 7, (i % 3) + 1, f"k{i}") for i in range(300)]
-    df = spark.createDataFrame(
-        rows, "event_id long, topic string, y int, m int, d int, key string"
-    )
-    write_partitioned(
-        df, path, key_col="key", granularity="day", stats_cols=["event_id"]
-    )
-    maps = read_zone_maps(spark, path)
-    assert maps["kind"] == "partitions" and len(maps["entries"]) == 3
-
-    # (a) disjoint probe: every partition's [min,max] excludes it
-    full = files_touched(spark.read.parquet(path))
-    pruned = read_pruned(spark, path, skip_where=[("event_id", 10_000, 20_000)])
-    assert pruned.count() == 0
-    # the exclusion predicate prunes at PLANNING: no files scanned
-    assert files_touched(pruned.filter(F.lit(True))) == 0 < full
-
-    # (b) overlapping probe loses nothing vs the real filter
-    hit = read_pruned(spark, path, skip_where=[("event_id", 0, 99)])
-    want = spark.read.parquet(path).filter("event_id between 0 and 99")
-    assert sorted(r["event_id"] for r in hit.filter(
-        "event_id between 0 and 99").collect()) == sorted(
-        r["event_id"] for r in want.collect())
-
-    # (c) append widens: new high ids land in d=1 only; a probe on the
-    # new range must read d=1 but may skip d=2/d=3
-    more = spark.createDataFrame(
-        [(50_000 + i, "t1", 2021, 7, 1, f"n{i}") for i in range(50)],
-        "event_id long, topic string, y int, m int, d int, key string",
-    )
-    write_partitioned(
-        more, path, key_col="key", granularity="day", stats_cols=["event_id"]
-    )
-    new_probe = read_pruned(spark, path, skip_where=[("event_id", 50_000, 60_000)])
-    assert new_probe.filter("event_id >= 50000").count() == 50
-    assert files_touched(new_probe) < files_touched(spark.read.parquet(path))
-
-    # (d) a statless partition (written WITHOUT stats_cols) is always read
-    bypass = spark.createDataFrame(
-        [(999_999, "t1", 2021, 7, 9, "x")],
-        "event_id long, topic string, y int, m int, d int, key string",
-    )
-    write_partitioned(bypass, path, key_col="key", granularity="day")
-    ids = {r["event_id"] for r in read_pruned(
-        spark, path, skip_where=[("event_id", 10_000, 20_000)]).collect()}
-    assert 999_999 in ids  # unknown dir: conservative read
-
-
-def test_sink_zone_maps_widen_before_write_crash_safe(spark, tmp_path):
-    """The sidecar is widened BEFORE the data lands (round-9 advice): a
-    crash between the two steps leaves bounds WIDER than the data —
-    conservative — never an existing entry narrower than its partition.
-    Simulated crash: merge the batch's stats, don't write the batch; the
-    probe covering the phantom range just reads conservatively. After
-    the retry lands the data, every row is found."""
-    from lambda_kafka_to_s3_parquet_spark.operators.sink import (
-        _merge_partition_stats,
-        partition_cols,
-        read_pruned,
-        read_zone_maps,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "t")
-    schema = "event_id long, topic string, y int, m int, d int, key string"
-    base = spark.createDataFrame(
-        [(i, "t1", 2021, 7, 1, f"k{i}") for i in range(100)], schema
-    )
-    write_partitioned(
-        base, path, key_col="key", granularity="day", stats_cols=["event_id"]
-    )
-
-    # "crash": the appending writer widened the sidecar but never landed
-    # its data (the order write_partitioned now guarantees)
-    more = spark.createDataFrame(
-        [(5_000 + i, "t1", 2021, 7, 1, f"n{i}") for i in range(10)], schema
-    )
-    _merge_partition_stats(
-        more, path, list(partition_cols("day")), ["event_id"], "day"
-    )
-    entry = next(iter(read_zone_maps(spark, path)["entries"].values()))
-    assert entry["event_id"][1] >= 5_009  # pre-widened past the data
-
-    # wider-than-data is conservative: a probe skipping [5000, 6000]
-    # cannot skip d=1 (its recorded range now overlaps), so the base
-    # rows all survive; and the real filter loses nothing
-    got = read_pruned(spark, path, skip_where=[("event_id", 5_000, 6_000)])
-    assert got.count() == 100
-
-    # retry lands the data inside the already-published bounds: the
-    # pre-widened entry still admits the new range, so the probe that
-    # targets it reads the partition and finds every retried row
-    write_partitioned(
-        more, path, key_col="key", granularity="day", stats_cols=["event_id"]
-    )
-    found = read_pruned(spark, path, skip_where=[("event_id", 5_000, 6_000)])
-    assert found.filter("event_id >= 5000").count() == 10
-
-
-def test_sink_zone_maps_clustered_files(spark, tmp_path):
-    """File-granularity zone maps from write_clustered: a range probe on
-    the cluster column scans only surviving files (strict subset), the
-    kept rows equal the real filter, and append mode refuses stats."""
-    import pytest
-
-    from lambda_kafka_to_s3_parquet_spark.operators.sink import (
-        files_touched,
-        read_pruned,
-        read_zone_maps,
-        write_clustered,
-    )
-    from lambda_kafka_to_s3_parquet_spark.session import load_table
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "value"
-    )
-    path = str(tmp_path / "clu")
-    write_clustered(events, path, ["event_id"], n_files=8, stats_cols=["event_id"])
-    maps = read_zone_maps(spark, path)
-    assert maps["kind"] == "files" and maps["complete"] and len(maps["entries"]) == 8
-
-    lo, hi = 0, events.count() // 8  # ~first file's range
-    pruned = read_pruned(spark, path, skip_where=[("event_id", lo, hi)])
-    assert files_touched(pruned) < 8
-    got = sorted(r["event_id"] for r in pruned.filter(
-        f"event_id between {lo} and {hi}").collect())
-    want = sorted(r["event_id"] for r in events.filter(
-        f"event_id between {lo} and {hi}").collect())
-    assert got == want and len(got) > 0
-
-    # provably-empty range: zero rows, schema intact
-    none = read_pruned(spark, path, skip_where=[("event_id", 10**12, 10**13)])
-    assert none.count() == 0 and none.columns == pruned.columns
-
-    with pytest.raises(ValueError, match="overwrite"):
-        write_clustered(events, path, ["event_id"], mode="append",
-                        stats_cols=["event_id"])
-
-
-def test_sink_zone_maps_cas_never_loses_rival_widening(spark, tmp_path, monkeypatch):
-    """A rival writer publishing BETWEEN this writer's sidecar read and
-    its publish must not be clobbered: the versioned-name CAS makes the
-    first publish attempt fail, and the retry re-merges from the rival's
-    state — the final sidecar carries BOTH widenings (round-10 advice:
-    the old read-compare-replace still had a lost-update window)."""
-    import lambda_kafka_to_s3_parquet_spark.operators.sink as sink_mod
-    from lambda_kafka_to_s3_parquet_spark.operators.sink import (
-        _merge_partition_stats,
-        _publish_zone_maps_cas,
-        partition_cols,
-        read_zone_maps,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "t")
-    schema = "event_id long, topic string, y int, m int, d int, key string"
-    base = spark.createDataFrame(
-        [(i, "t1", 2021, 7, 1, f"k{i}") for i in range(10)], schema
-    )
-    write_partitioned(
-        base, path, key_col="key", granularity="day", stats_cols=["event_id"]
-    )
-
-    real_cas = sink_mod._publish_zone_maps_cas
-    fired = {"n": 0}
-
-    def racing_cas(spark_, path_, maps_, base_version):
-        if fired["n"] == 0:
-            fired["n"] += 1
-            # rival lands v(base+1) first, widening the hi bound to 9999
-            rival, rv = sink_mod._read_zone_maps_versioned(spark_, path_)
-            key = next(iter(rival["entries"]))
-            rival["entries"][key]["event_id"][1] = 9_999
-            assert real_cas(spark_, path_, rival, rv)
-        return real_cas(spark_, path_, maps_, base_version)
-
-    monkeypatch.setattr(sink_mod, "_publish_zone_maps_cas", racing_cas)
-    lo_batch = spark.createDataFrame(
-        [(-50, "t1", 2021, 7, 1, "neg")], schema
-    )
-    _merge_partition_stats(
-        lo_batch, path, list(partition_cols("day")), ["event_id"], "day"
-    )
-    assert fired["n"] == 1  # the race actually happened (first CAS lost)
-
-    entry = next(iter(read_zone_maps(spark, path)["entries"].values()))
-    assert entry["event_id"][0] <= -50      # this writer's widening kept
-    assert entry["event_id"][1] == 9_999    # rival's widening kept too
