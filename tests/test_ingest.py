@@ -295,6 +295,43 @@ def test_jvm_from_avro_dispatch(spark):
     assert decode_stage(kafka, SchemaProvider(), GOLDEN_TOPIC).count() == 16
 
 
+def test_jvm_from_avro_probe_runs_once_per_application(spark, monkeypatch):
+    """The spark-avro classpath probe is memoized per Spark application:
+    once a ``decode_stage`` build has resolved the dispatch, later builds
+    in the same session make no JVM class lookup, and an explicit
+    ``use_jvm`` never probes."""
+
+    class CountingJVM:
+        """``spark._jvm`` proxy that records each JVM class lookup."""
+
+        def __init__(self, target, lookups, name=""):
+            self._target, self._lookups, self._name = target, lookups, name
+
+        def __getattr__(self, name):
+            return CountingJVM(getattr(self._target, name), self._lookups, name)
+
+        def __call__(self, *args):
+            if self._name == "classForName":
+                self._lookups.append(args[0])
+            return self._target(*args)
+
+    lookups: list[str] = []
+    monkeypatch.setattr(spark, "_jvm", CountingJVM(spark._jvm, lookups))
+    kafka = spark.createDataFrame(
+        [], "topic string, partition int, offset long, timestamp long, "
+        "key binary, value binary"
+    )
+
+    decode_stage(kafka, SchemaProvider(), GOLDEN_TOPIC, use_jvm=False)
+    assert lookups == []
+    first = decode_stage(kafka, SchemaProvider(), GOLDEN_TOPIC)
+    assert lookups in ([], ["org.apache.spark.sql.avro.AvroDataToCatalyst"])
+    del lookups[:]
+    second = decode_stage(kafka, SchemaProvider(), GOLDEN_TOPIC)
+    assert lookups == []
+    assert second.schema == first.schema
+
+
 def test_jvm_from_avro_path_byte_exact(spark):
     """The JVM ``from_avro`` fast path must produce the identical golden
     rows as the Arrow fallback. The spark-avro MODULE jar is not bundled

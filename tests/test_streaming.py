@@ -3,18 +3,33 @@ checkpoint, watermark-gated append windows, micro-batch file triggers."""
 
 from __future__ import annotations
 
+import base64
+import glob
+import json
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
+    current_version,
+    snapshot_read,
+)
 from lambda_kafka_to_s3_parquet_spark.plans.ingest import GOLDEN_EVENT, GOLDEN_TOPIC
 from lambda_kafka_to_s3_parquet_spark.session import load_table
+from lambda_kafka_to_s3_parquet_spark.sources.avro_codec import (
+    SchemaProvider,
+    confluent_wrap,
+    encode_avro_record,
+)
 from lambda_kafka_to_s3_parquet_spark.streaming.pipeline import (
     run_ingest_stream,
     run_windowed_stream,
     windowed_event_counts,
 )
+
+from .conftest import jobs_in
 
 SF = "/root/testdata/sf0.001"
 EVENTS_SCHEMA = (
@@ -1944,3 +1959,113 @@ def test_overlapping_state_partition_scopes_restore_the_session_value(spark):
         assert spark.conf.get(key) == "13"
     finally:
         spark.conf.set(key, original)
+
+
+# ---------------------------------------------------------------------------
+# self-contained ingest lands: envelopes built here, Confluent-wire Avro
+# ---------------------------------------------------------------------------
+
+OTHER_TOPIC = "lndcdcadsprpsl_flightday"
+
+
+def _write_envelope(path, topic=GOLDEN_TOPIC, n=6):
+    """One Lambda-event envelope file of ``n`` ``topic`` records, each
+    value ``confluent_wrap(id, encode_avro_record(row))`` base64-encoded
+    under the default catalog's schema for ``topic``."""
+    sid, fields = SchemaProvider().schema_for(topic)
+    records = []
+    for i in range(n):
+        row = {f.name: i if f.type == "long" else f"{f.name}-{i}" for f in fields}
+        records.append(
+            {
+                "topic": topic,
+                "partition": 0,
+                "offset": i,
+                "timestamp": 1767571200000 + i,
+                "timestampType": "CREATE_TIME",
+                "key": base64.b64encode(str(i).encode()).decode(),
+                "value": base64.b64encode(
+                    confluent_wrap(sid, encode_avro_record(row, fields))
+                ).decode(),
+            }
+        )
+    with open(path, "w") as fh:
+        json.dump({"records": {f"{topic}-0": records}}, fh)
+
+
+def _landed_rows(spark, out, commit_protocol):
+    if commit_protocol == "snapshot":
+        return snapshot_read(spark, out).count()
+    return spark.read.parquet(out).count()
+
+
+@pytest.mark.parametrize("commit_protocol", ["snapshot", "inplace"])
+def test_ingest_land_runs_one_spark_job(spark, tmp_path, commit_protocol):
+    """A non-empty land is one Spark job: the write is the only action
+    over the Python decode. An emptiness probe before it would add a job
+    that re-runs the decode and abandons its Python worker."""
+    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    (tmp_path / "in").mkdir()
+    _write_envelope(f"{inp}/ev-0.json", n=6)
+
+    def land():
+        _await(run_ingest_stream(
+            spark, inp, out, ckpt, GOLDEN_TOPIC, commit_protocol=commit_protocol
+        ))
+
+    assert jobs_in(spark, land) == 1
+    assert _landed_rows(spark, out, commit_protocol) == 6
+
+
+@pytest.mark.parametrize("commit_protocol", ["snapshot", "inplace"])
+def test_ingest_land_of_other_topic_commits_nothing(spark, tmp_path, commit_protocol):
+    """A batch whose records all belong to another catalog topic decodes
+    to nothing and lands nothing: no snapshot version and no batch-id
+    mark, or no data file. A restart on the same checkpoint reprocesses
+    nothing, and the next non-empty batch lands as usual."""
+    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    (tmp_path / "in").mkdir()
+    _write_envelope(f"{inp}/ev-0.json", topic=OTHER_TOPIC, n=4)
+
+    def land():
+        q = run_ingest_stream(
+            spark, inp, out, ckpt, GOLDEN_TOPIC, commit_protocol=commit_protocol
+        )
+        _await(q)
+        return q
+
+    first = land()
+    assert first.lastProgress["numInputRows"] == 1  # the envelope was read
+    assert current_version(spark, out) == 0
+    assert not os.path.exists(f"{out}/_last_landed_batch.json")
+    assert glob.glob(f"{out}/**/*.parquet", recursive=True) == []
+
+    assert jobs_in(spark, land) == 0
+
+    _write_envelope(f"{inp}/ev-1.json", n=5)
+    land()
+    assert _landed_rows(spark, out, commit_protocol) == 5
+    if commit_protocol == "snapshot":
+        assert current_version(spark, out) == 1
+
+
+def test_empty_first_snapshot_batch_over_inplace_sink_fails_fast(spark, tmp_path):
+    """The bootstrap guard runs before every snapshot write, so a
+    snapshot stream pointed at an in-place-landed sink fails at its
+    first batch even when that batch is empty."""
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    (tmp_path / "in").mkdir()
+    _write_envelope(f"{inp}/ev-0.json", n=3)
+    _await(run_ingest_stream(spark, inp, out, str(tmp_path / "ck1"), GOLDEN_TOPIC))
+    assert spark.read.parquet(out).count() == 3
+
+    other = str(tmp_path / "other")
+    (tmp_path / "other").mkdir()
+    _write_envelope(f"{other}/ev-0.json", topic=OTHER_TOPIC, n=2)
+    q = run_ingest_stream(
+        spark, other, out, str(tmp_path / "ck2"), GOLDEN_TOPIC,
+        commit_protocol="snapshot",
+    )
+    with pytest.raises(Exception, match="existing in-place table"):
+        q.awaitTermination(120)
+    assert spark.read.parquet(out).count() == 3
