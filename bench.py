@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lambda_kafka_to_s3_parquet_spark import get_spark
 from lambda_kafka_to_s3_parquet_spark.plans import all_specs
+from lambda_kafka_to_s3_parquet_spark.session import cpu_count
 
 #: Headline set: at least one per operator family (relational scans/joins/
 #: windows/rollup/json/array, §2.9 dedup/similarity/text/multimodal,
@@ -273,10 +274,11 @@ HEADLINE = [
 #: driver-roundtrip-heavy streams — different victims each run), while
 #: /proc/stat showed ~9.6k CPU-seconds of cumulative steal and vmstat
 #: st=1 at idle. The warm-up protocol removes THERMAL noise; hypervisor
-#: steal it cannot — when BENCH_rN lands >30% above BENCH_local's
-#: committed numbers with this uniform-inflation signature, read it as
-#: the shared-host weather, not a regression (the r9/r10/r11 precedent,
-#: now with the steal counter attached). The +16 s vs r11's WARM
+#: steal it cannot — when BENCH_rN lands >30% above the same CPU
+#: count's committed BENCH_local_c{N} numbers with this
+#: uniform-inflation signature, read it as the shared-host weather,
+#: not a regression (the r9/r10/r11 precedent, now with the steal
+#: counter attached). The +16 s vs r11's WARM
 #: 115.0 is new surface: x44 grew its conditional-merge branch
 #: (+~1 s), x19 its funnel time-to-convert percentiles, x46 its
 #: container transcode (all four codecs now run in the pipeline),
@@ -553,7 +555,7 @@ def fit_tail(out: dict, budget: int = _TAIL_BUDGET) -> tuple[str, list[str]]:
 
     The queries dict grows every round, and an oversized line is parsed
     as nothing at all, so the line degrades loudly and parseably (the
-    full dict always lives in BENCH_local.json):
+    full dict always lives in the :func:`artifact_path` file):
 
     1. ``steal_per_query`` keeps its top ``_STEAL_TOP_N`` entries, rounded
        to 0.1 CPU-s, and ``steal_per_query_dropped`` counts the rest —
@@ -588,6 +590,19 @@ def fit_tail(out: dict, budget: int = _TAIL_BUDGET) -> tuple[str, list[str]]:
     )
     assert len(line) <= budget, "even the slim bench line overflows"
     return line, warnings
+
+
+def artifact_path() -> str:
+    """Where the full result dict goes: ``BENCH_local_c{N}.json`` beside
+    this script, ``N`` the worker-thread count of the run
+    (:func:`~lambda_kafka_to_s3_parquet_spark.session.cpu_count`:
+    ``$SPARK_GRAFT_CPUS``, else the host's CPUs). Runs at different core
+    counts keep separate files, so one never overwrites the other's
+    steal map."""
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        f"BENCH_local_c{cpu_count()}.json",
+    )
 
 
 def main() -> None:
@@ -659,7 +674,8 @@ def main() -> None:
     # but the line head with {"metric": ... was still cut off). So the
     # stdout line carries ONLY the sf0.1 queries dict and the headline
     # totals (~1.5 kB); the sf0.01 `queries_small` and `scale_ratio`
-    # maps live exclusively in BENCH_local.json, committed per round.
+    # maps live exclusively in the artifact_path() file, committed per
+    # round.
     out = {
         "metric": "total_headline_sec",
         "unit": "sec",
@@ -676,7 +692,7 @@ def main() -> None:
         # end. A polluted artifact shows steal comparable to value x
         # cores; a quiet one shows ~0. Queries whose every sample was
         # polluted were re-run once (n below); per-query steal lives in
-        # BENCH_local.json.
+        # the artifact_path() file.
         "steal_cpu_s": weather["steal_cpu_s"],
         "load1": weather["load1"],
         "polluted_reruns": len(weather["polluted_reruns"]),
@@ -693,8 +709,9 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
     }
     line, warnings = fit_tail(out)
+    artifact = artifact_path()
     for w in warnings:
-        print(f"WARNING: {w} (see BENCH_local.json)", file=sys.stderr, flush=True)
+        print(f"WARNING: {w} (see {os.path.basename(artifact)})", file=sys.stderr, flush=True)
     full = dict(out)
     full["weather"] = weather
     if small:
@@ -704,8 +721,7 @@ def main() -> None:
             "scale_ratio": ratios,
             "weather_small": small_weather,
         }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_local.json"), "w") as f:
+    with open(artifact, "w") as f:
         f.write(json.dumps(full) + "\n")
     # The JSON line must be the LAST thing on stdout/stderr: the driver
     # records a bounded tail, and round 8 lost the whole line to an async

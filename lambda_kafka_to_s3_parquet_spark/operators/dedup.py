@@ -808,16 +808,16 @@ def _store_meta(spark, store_path: str) -> dict | None:
 
 
 def _write_store_meta(spark, store_path: str, meta: dict) -> None:
-    """Publish the meta ATOMICALLY (tmp + delete-old + rename), the
+    """Publish the meta ATOMICALLY (tmp + overwrite rename), the
     snapshot-manifest protocol in miniature: a crash mid-write must never
     leave a truncated/garbled meta at the canonical name — readers would
     raise on it (fail-stop, but needlessly) or, worse, a JSON prefix that
     still parses could resurrect a stale registry. With rename, every
-    crash point leaves either the old meta or the new one. (The tiny
-    delete→rename window on rename-no-overwrite filesystems means a
-    concurrent reader could see the meta absent — the store is
-    single-writer and readers run in the same maintenance stream, so no
-    reader races this by contract.)"""
+    crash point leaves either the old meta or the new one. (Filesystems
+    without a native overwrite rename delete and rename inside that one
+    call, so a concurrent reader could see the meta absent for a moment
+    — the store is single-writer and readers run in the same
+    maintenance stream, so no reader races this by contract.)"""
     import json
 
     _replace_text(spark, f"{store_path}/{NEARDUP_STORE_META}", json.dumps(meta))
@@ -1904,10 +1904,11 @@ def incremental_duplicated_spans(
     meta = _gram_meta(spark, store_path)
     if meta is None:
         # A missing meta over a NON-empty store means a crashed meta
-        # publish (delete→rename window) — treating it as a fresh store
-        # would silently orphan all history (the bloom still answers
-        # 'maybe' but appends=[] skips every store read). Fail-stop,
-        # same as rollup._read_marker_state / load_pq_index.
+        # publish (the overwrite rename's delete-then-rename fallback) —
+        # treating it as a fresh store would silently orphan all history
+        # (the bloom still answers 'maybe' but appends=[] skips every
+        # store read). Fail-stop, same as rollup._read_marker_state /
+        # load_pq_index.
         fs, bloom_p = _fs_path(spark, f"{store_path}/{GRAM_STORE_BLOOM}")
         _, appends_p = _fs_path(spark, f"{store_path}/appends")
         if fs.exists(bloom_p) or fs.exists(appends_p):

@@ -9,9 +9,9 @@ each protocol the engine publishes its metadata through.
 * :func:`_create_atomic` — tmp + rename to a FRESH name: the
   compare-and-swap. Rename-to-existing fails on every Hadoop filesystem,
   so exactly one of N racing creators wins.
-* :func:`_replace_text` — tmp + delete + rename: overwrite semantics
-  with no torn state, but a short window with no file at all (see its
-  docstring for what readers must guard).
+* :func:`_replace_text` — tmp + one overwrite rename: the old content
+  or the new one, never a torn file (see its docstring for the one
+  crash point some filesystems keep, which readers must guard).
 
 All three writers take ``str`` (written as UTF-8) or ``bytes``. Paths
 resolve through :func:`_fs_path`, so every protocol works on any
@@ -22,6 +22,8 @@ may import this one.
 from __future__ import annotations
 
 import uuid
+
+from py4j.protocol import Py4JJavaError
 
 
 def _fs_path(spark, path: str):
@@ -87,21 +89,39 @@ def _create_atomic(spark, path: str, content: str | bytes) -> None:
         raise IOError(f"atomic create failed for {path} (already exists?)")
 
 
+def _file_context(spark, hpath):
+    """Hadoop ``FileContext`` for ``hpath``'s filesystem: the API whose
+    rename can overwrite (``FileSystem.rename`` refuses an existing
+    destination)."""
+    return spark._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        hpath.toUri(), spark._jsc.hadoopConfiguration()
+    )
+
+
 def _replace_text(spark, path: str, content: str | bytes) -> None:
-    """Write with OVERWRITE semantics (tmp + delete-dest + rename). Every
-    crash point leaves the old content, the new content, or — between
-    the delete and the rename — NO file at ``path`` (rename-to-existing
-    fails on HDFS/S3A, so the old file must go first). That window is
-    the condition every reader of a replaced file must guard: an absent
-    file beside data that needs it is a crashed publish, never "empty"
-    (the gram store, band store and ``load_pq_index`` fail stop on it).
+    """Write with OVERWRITE semantics: tmp + one
+    ``FileContext.rename(tmp, path, OVERWRITE)``, the call Spark's
+    ``FileContextBasedCheckpointFileManager`` publishes checkpoint files
+    with. A rename that fails raises, removes its tmp and leaves the old
+    content in place. On HDFS the overwrite rename is one atomic NameNode
+    operation; where the filesystem's binding has no native one (the
+    local filesystem among them), Hadoop's generic fallback deletes the
+    old file and renames inside that same call, so only a crash exactly
+    there can leave NO file at ``path``.
+    Readers of a replaced file therefore still treat an absent file
+    beside data that needs it as a crashed publish, never "empty" (the
+    gram store, band store and ``load_pq_index`` fail stop on it).
     Used for the single-writer registries that are rewritten in place:
     the band/gram store metas, the gram-store bloom and the index
     metas."""
     fs, final = _fs_path(spark, path)
     tmp = final.suffix(f".tmp-{uuid.uuid4().hex}")
     _write_stream(fs, tmp, content)
-    fs.delete(final, False)
-    if not fs.rename(tmp, final):
+    rename = spark._jvm.org.apache.hadoop.fs.Options.Rename
+    overwrite = spark.sparkContext._gateway.new_array(rename, 1)
+    overwrite[0] = rename.OVERWRITE
+    try:
+        _file_context(spark, final).rename(tmp, final, overwrite)
+    except (Py4JJavaError, OSError) as e:
         fs.delete(tmp, False)
-        raise IOError(f"replace failed for {path}")
+        raise IOError(f"replace failed for {path}") from e

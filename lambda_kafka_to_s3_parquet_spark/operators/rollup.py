@@ -335,9 +335,11 @@ def _write_last_batch_id(
     checkpoint: str,
     extra: dict | None = None,
 ) -> None:
-    # In place, never replaced: a replace's delete→rename window would
-    # leave the marker absent, which reads as "no batch applied" and
-    # re-merges every batch; a torn marker fails stop instead.
+    # In place, never replaced: a crash inside a replace's overwrite
+    # rename (a delete then a rename where the filesystem has no native
+    # one) would leave the marker absent, which reads as "no batch
+    # applied" and re-merges every batch; a torn marker fails stop
+    # instead.
     _write_in_place(
         spark,
         marker,

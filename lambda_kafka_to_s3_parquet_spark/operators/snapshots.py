@@ -702,6 +702,16 @@ def _group_rels(rels: list[str], partition_by: list[str] | None) -> dict[str, li
 _BLOOM_M = 8192
 _BLOOM_K = 6
 
+#: Bloom key types: bits are set from the JVM ``CAST(col AS STRING)``
+#: but probed with python ``str(value)``, and the two only provably agree
+#: for integral/string/date keys. Everything else is rejected — a
+#: divergence (python str(True)='True' vs JVM 'true'; a timestamp's
+#: '.500000' vs the JVM's '.5'; binary reprs) makes the probe hash a
+#: DIFFERENT string than the bits were set from and wrongly proves
+#: present keys absent: the one bloom failure mode that breaks
+#: correctness instead of costing I/O.
+_BLOOM_OK = ("tinyint", "smallint", "int", "bigint", "string", "date")
+
 #: snapshot_merge_into's auto bloom tier collects the source's distinct
 #: keys only up to this many (one tiny job); beyond it the merge falls
 #: back to range pruning — bounding both the collect and the per-dir
@@ -710,11 +720,13 @@ _MERGE_BLOOM_PROBE_CAP = 1024
 
 
 def _bloom_py_positions(value, m: int, k: int) -> list[int]:
-    """Kirsch-Mitzenmacher bit positions for one key — PYTHON twin of the
-    JVM expression in :func:`_collect_dir_pruning`: 60 bits of
-    md5(str(value)), split into (h1, h2|1), positions (h1 + i·h2) mod m.
-    md5-over-the-string rather than xxhash64 so the prune side can probe
-    WITHOUT a Spark job and the construction stays engine-portable."""
+    """Kirsch-Mitzenmacher bit positions for one key — the ONE bloom hash,
+    used to set a commit's bits (:func:`_collect_dir_pruning`) and to
+    probe them (:func:`_bloom_prune`): 60 bits of md5(str(value)), split
+    into (h1, h2|1), positions (h1 + i·h2) mod m. md5-over-the-string
+    rather than xxhash64 so probing needs no Spark job and the bits stay
+    those every earlier manifest recorded (their writer computed the same
+    positions as a JVM expression over ``CAST(col AS STRING)``)."""
     import hashlib
 
     h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16)
@@ -746,10 +758,13 @@ def _collect_dir_pruning(
     * ``blooms`` — per-dir BLOOM FILTERS over ``bloom_cols`` point-lookup
       keys, the membership complement of the range zone maps: min/max
       prunes key-CLUSTERED tables, but a GDPR-style delete by user id on
-      a time-partitioned table intersects every dir's key range. Bits
-      are set by a JVM md5 expression whose python twin
-      (:func:`_bloom_py_positions`) probes with no Spark job. NULLs set
-      no bits (a point probe ``col = NULL`` matches nothing).
+      a time-partitioned table intersects every dir's key range. The
+      aggregate collects each dir's DISTINCT keys as
+      ``CAST(col AS STRING)``; the driver sets the bits from them with
+      :func:`_bloom_py_positions`, the hash every probe uses. NULLs set
+      no bits (``collect_set`` skips them; a point probe ``col = NULL``
+      matches nothing). A dir ships all its distinct keys to the driver
+      — cheap next to per-row bit hashing in an interpreted aggregate.
 
     The read is pinned to ``df``'s own data schema (the frame the commit
     just wrote), so no schema-inference job runs; partition columns are
@@ -779,15 +794,6 @@ def _collect_dir_pruning(
         .option("basePath", base)
         .parquet(base)
     )
-    # WHITELIST, not blacklist: bits are set from the JVM
-    # CAST(col AS STRING) but probed with python str(value), and the two
-    # only provably agree for integral/string/date keys. Everything else
-    # is rejected — a divergence (python str(True)='True' vs JVM 'true';
-    # a timestamp's '.500000' vs the JVM's '.5'; binary reprs) makes the
-    # probe hash a DIFFERENT string than the bits were set from and
-    # wrongly proves present keys absent: the one bloom failure mode
-    # that breaks correctness instead of costing I/O.
-    _BLOOM_OK = ("tinyint", "smallint", "int", "bigint", "string", "date")
     for c in bloom_cols:
         t = read.schema[c].dataType.simpleString()
         if t not in _BLOOM_OK:
@@ -800,20 +806,10 @@ def _collect_dir_pruning(
     aggs = []
     for c in stats_cols:
         aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    for ci, c in enumerate(bloom_cols):
-        # k collect_sets of bit positions per column; md5(NULL) is NULL,
-        # so a NULL key yields NULL positions, which collect_set skips
-        h = F.conv(
-            F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        h1 = F.pmod(h, F.lit(1 << 30))
-        h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
-        aggs += [
-            F.collect_set(F.pmod(h1 + F.lit(i) * h2, F.lit(m))).alias(
-                f"_b{ci}_{i}"
-            )
-            for i in range(k)
-        ]
+    aggs += [
+        F.collect_set(F.col(c).cast("string")).alias(f"_b{ci}")
+        for ci, c in enumerate(bloom_cols)
+    ]
     dir_of = F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
     rows = read.groupBy(dir_of.alias("_dir")).agg(*aggs).collect()
 
@@ -849,8 +845,8 @@ def _collect_dir_pruning(
         b = {}
         for ci, c in enumerate(bloom_cols):
             bits = bytearray(m // 8)
-            for i in range(k):
-                for p in r[f"_b{ci}_{i}"]:
+            for key in r[f"_b{ci}"]:
+                for p in _bloom_py_positions(key, m, k):
                     bits[p // 8] |= 1 << (p % 8)
             if any(bits):
                 b[c] = {"m": m, "k": k, "bits": bits.hex()}
@@ -877,8 +873,8 @@ def _bloom_probe_canonical(col: str, value) -> str:
             f"bloom probe value {value!r} for column {col!r} has type "
             f"{type(value).__name__}: only int, str and datetime.date "
             "probes have the same string form python-side and JVM-side "
-            "(the writer whitelists tinyint/smallint/int/bigint/string/"
-            "date keys) — cast the probe to the stored key type"
+            f"(the writer whitelists {'/'.join(_BLOOM_OK)} keys) — cast "
+            "the probe to the stored key type"
         )
     if isinstance(value, _dt.datetime):
         # datetime.date accepts datetime instances (subclass) but
@@ -1639,10 +1635,11 @@ def snapshot_append(
     where the table is NOT clustered on the key (the GDPR-delete shape).
     Both come from ONE schema-pinned read-back of the commit's own files
     (:func:`_collect_dir_pruning`: one aggregate, two Spark jobs, added
-    to the write's one — only when either option is given). Additive
-    schema evolution is validated BEFORE the data write
-    (:func:`_merged_commit_schema`): new columns are fine, a type
-    change fails fast with nothing landed.
+    to the write's one — only when either option is given); it returns
+    each dir's distinct bloom keys and the driver sets their bits with
+    the probe's own hash. Additive schema evolution is validated BEFORE
+    the data write (:func:`_merged_commit_schema`): new columns are
+    fine, a type change fails fast with nothing landed.
 
     HIDDEN PARTITIONING (round 13, the Iceberg transform family):
     ``partition_by`` entries may be transforms — ``days(ts)``,

@@ -58,7 +58,7 @@ def _read_index_meta(spark: SparkSession, path: str) -> dict | None:
 
 
 def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    """Atomic publish (tmp + delete + rename), written AFTER the data —
+    """Atomic publish (tmp + overwrite rename), written AFTER the data —
     the meta IS the commit: no meta, no index (same protocol as the band
     store's meta and the snapshot manifests)."""
     _replace_text(spark, f"{path}/{VECTOR_INDEX_META}", json.dumps(meta))

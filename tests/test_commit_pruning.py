@@ -2,20 +2,25 @@
 commit's per-dir zone maps and blooms (``_collect_dir_pruning``).
 
 Pins its job count, its output against an independent per-dir oracle,
-partition values whose dir names Spark escapes, and the list-typed key
-probes of the readers that consume it."""
+its bloom bits against the JVM position formula earlier manifests were
+written with, partition values whose dir names Spark escapes, and the
+list-typed key probes of the readers that consume it."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import json
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
+from lambda_kafka_to_s3_parquet_spark.operators import snapshots
 from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
     _BLOOM_K,
     _BLOOM_M,
+    _bloom_prune,
     _bloom_py_positions,
     _load_manifest,
     current_version,
@@ -126,6 +131,96 @@ def test_stats_and_blooms_match_per_dir_oracle(spark, table):
     assert any("bi" not in b for b in m["blooms"].values())
     assert any(s["x"][1] != s["x"][1] for s in m["stats"].values())  # a NaN max
 
+
+def _jvm_bloom_hex(part, c: str, m: int, k: int) -> str:
+    """The bits Spark itself computes for column ``c`` of ``part`` with the
+    JVM position formula earlier manifests were written with:
+    md5(CAST(c AS STRING)) -> conv(first 15 hex, 16, 10) -> (h1 + i·h2)
+    mod m."""
+    h = F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10).cast("long")
+    h1 = F.pmod(h, F.lit(1 << 30))
+    h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
+    pos = F.explode(F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)]))
+    ps = [r[0] for r in part.where(F.col(c).isNotNull()).select(pos).distinct().collect()]
+    bits = bytearray(m // 8)
+    for p in ps:
+        bits[p // 8] |= 1 << (p % 8)
+    return bits.hex()
+
+
+_GOLDEN_COLS = ["s", "b", "t", "sm", "d"]
+_EDGE = [
+    ("é", -(2**63), -128, -32768, dt.date(1, 1, 1)),
+    ("日本", 2**63 - 1, 127, 32767, dt.date(9999, 12, 31)),
+    ("\U0001F600", -1, -1, -1, dt.date(1969, 12, 31)),
+    ("", 0, 0, 0, dt.date(2024, 2, 29)),
+]
+
+
+def test_bloom_bits_match_the_jvm_position_formula(spark, table):
+    """Manifests written before the driver set the bits (a JVM expression
+    did) must probe identically: the committed bits equal Spark's own
+    evaluation of the old formula over non-ASCII, empty, extreme-integer,
+    tinyint/smallint and date keys, a NULL-only dir records no bloom, and
+    a dir of 5,000 distinct keys saturates the same way."""
+    rows = [("edge",) + r for r in _EDGE]
+    rows += [("nulls", None, None, None, None, None)] * 3
+    rows += [
+        (
+            "big",
+            f"u{i}",
+            i * 7919 - 2**40,
+            i % 256 - 128,
+            i - 16384,
+            dt.date(2000, 1, 1) + dt.timedelta(days=i),
+        )
+        for i in range(5000)
+    ]
+    df = spark.createDataFrame(
+        rows, "p string, s string, b bigint, t tinyint, sm smallint, d date"
+    )
+    snapshot_append(spark, table, df, ["p"], bloom_cols=_GOLDEN_COLS)
+    m = _load_manifest(spark, table, current_version(spark, table))
+    rel = {d.rsplit("=", 1)[1]: d for ds in m["partitions"].values() for d in ds}
+    assert set(rel) == {"edge", "nulls", "big"}
+
+    assert rel["nulls"] not in m["blooms"]
+    for name in ("edge", "big"):
+        part = spark.read.parquet(f"{table}/{rel[name]}")
+        want = {
+            c: {"m": _BLOOM_M, "k": _BLOOM_K, "bits": _jvm_bloom_hex(part, c, _BLOOM_M, _BLOOM_K)}
+            for c in _GOLDEN_COLS
+        }
+        assert m["blooms"][rel[name]] == want, name
+    big = bytes.fromhex(m["blooms"][rel["big"]]["s"]["bits"])
+    assert sum(bin(x).count("1") for x in big) > 0.9 * _BLOOM_M
+
+    # the python probe finds every edge key in the committed bits
+    for c, values in zip(_GOLDEN_COLS, zip(*_EDGE)):
+        for v in values:
+            assert _bloom_prune(m, [rel["edge"]], [(c, [v])]) == [rel["edge"]], (c, v)
+
+
+def test_bloom_bits_have_one_hash_implementation():
+    """``snapshots.py`` sets and probes bloom bits with
+    ``_bloom_py_positions`` only: it builds no JVM ``md5`` expression (a
+    second implementation that would have to agree with the probe)."""
+    tree = ast.parse(pathlib.Path(snapshots.__file__).read_text())
+    strays = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        recv = f.value.id if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) else None
+        if name == "md5" and recv != "hashlib":
+            strays.append(node.lineno)
+        strays += [
+            a.lineno
+            for a in node.args
+            if isinstance(a, ast.Constant) and isinstance(a.value, str) and "md5(" in a.value.lower()
+        ]
+    assert strays == []
 
 ESCAPED = ["a b", "x%y", "c:d", None, ""]
 

@@ -2,8 +2,9 @@
 plus a source guard that keeps them the package's only copy.
 
 A crash after the tmp write leaves a ``<name>.tmp-<hex>`` behind; a
-failed rename must raise, clean its tmp and leave the destination as the
-protocol promises; binary files round-trip byte for byte."""
+failed rename must raise, clean its tmp and leave the destination's old
+content; a replace leaves no tmp or checksum file behind; binary files
+round-trip byte for byte."""
 
 from __future__ import annotations
 
@@ -42,6 +43,10 @@ def test_leftover_tmp_is_invisible_and_blocks_nothing(spark, tmp_path):
     assert mf._read_text(spark, replaced) == '{"v": 1}'
     mf._replace_text(spark, replaced, '{"v": 2}')
     assert mf._read_text(spark, replaced) == '{"v": 2}'
+    # the overwrite rename moved the tmp; no tmp or .crc of it is left
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["meta.json", os.path.basename(leftover)]
+    )
 
     created = str(tmp_path / "latest-00001")
     _leave_tmp(created, b"v00001-dead.json")
@@ -57,12 +62,16 @@ def test_leftover_tmp_is_invisible_and_blocks_nothing(spark, tmp_path):
 
 
 class _RenameFails:
-    """The real Hadoop FS, except that every rename reports failure."""
+    """The real Hadoop FileSystem or FileContext, except that every rename
+    fails the way its API reports it: ``FileSystem.rename`` returns
+    false, the overwrite ``FileContext.rename`` throws."""
 
     def __init__(self, fs):
         self._fs = fs
 
-    def rename(self, src, dst):
+    def rename(self, src, dst, *options):
+        if options:
+            raise OSError("injected rename failure")
         return False
 
     def __getattr__(self, name):
@@ -71,13 +80,16 @@ class _RenameFails:
 
 def _fail_renames(monkeypatch) -> None:
     """Route the primitives through :class:`_RenameFails` from now on."""
-    real = mf._fs_path
+    real_fs, real_fc = mf._fs_path, mf._file_context
 
     def resolve(spark, path):
-        fs, hpath = real(spark, path)
+        fs, hpath = real_fs(spark, path)
         return _RenameFails(fs), hpath
 
     monkeypatch.setattr(mf, "_fs_path", resolve)
+    monkeypatch.setattr(
+        mf, "_file_context", lambda spark, hpath: _RenameFails(real_fc(spark, hpath))
+    )
 
 
 def test_failed_rename_raises_and_cleans_its_tmp(spark, tmp_path, monkeypatch):
@@ -101,10 +113,8 @@ def test_failed_rename_raises_and_cleans_its_tmp(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="replace failed"):
         mf._replace_text(spark, replaced, "new meta")
     assert _tmps(tmp_path) == []
-    # the replace deletes the destination before its rename: a failure
-    # there leaves NO file, the window its readers guard (see the
-    # _replace_text docstring), never a torn or half-new one
-    assert mf._read_text(spark, replaced) is None
+    # one overwrite rename: a failure there leaves the old content
+    assert mf._read_text(spark, replaced) == "old meta"
 
 
 def test_read_bytes_absent_and_binary(spark, tmp_path):
