@@ -58,14 +58,10 @@ def with_partition_columns(
     ``granularity='day'`` reproduces the v2 handler's daily layout.
     """
     ts = F.current_timestamp() if wall_clock else F.timestamp_millis(F.col(ts_col))
-    out = (
-        df.withColumn("y", F.year(ts))
-        .withColumn("m", F.month(ts))
-        .withColumn("d", F.dayofmonth(ts))
-    )
-    if partition_cols(granularity)[-1] == "h":
-        out = out.withColumn("h", F.hour(ts))
-    return out
+    parts = {"y": F.year, "m": F.month, "d": F.dayofmonth, "h": F.hour}
+    wanted = partition_cols(granularity)
+    # One withColumns: one eager analysis instead of one per column.
+    return df.withColumns({c: f(ts) for c, f in parts.items() if c in wanted})
 
 
 @dataclass(frozen=True)

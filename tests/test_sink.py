@@ -79,6 +79,15 @@ def test_wall_clock_partitioning(spark):
     assert row["y"] == now.year
 
 
+def test_partition_columns_append_in_order_from_kafka_millis(spark):
+    # 2021-09-02T20:03:21.008Z, the Kafka timestamp of the reference sample.
+    df = spark.createDataFrame([(1630613001008, "k")], "kafka_ts long, v string")
+    hourly = with_partition_columns(df)
+    assert hourly.columns == ["kafka_ts", "v", "y", "m", "d", "h"]
+    assert tuple(hourly.first())[2:] == (2021, 9, 2, 20)
+    assert with_partition_columns(df, granularity="day").columns[2:] == ["y", "m", "d"]
+
+
 def test_verify_landed_readback(spark, landed):
     from lambda_kafka_to_s3_parquet_spark.operators.sink import verify_landed
 
