@@ -30,6 +30,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -458,10 +459,14 @@ def _time_set(
     recorded, and a query whose EVERY timed run was polluted (steal
     > ``_STEAL_FRACTION`` of its wall x cores) gets ONE bonus run —
     min-of-N only removes noise when at least one sample was clean.
+    A query that raises gets no timing: its name and exception class go
+    to ``failed_queries`` and the other queries still run, so one broken
+    query never loses the rest of the set.
     Returns ``(timings, weather)`` where weather carries the phase's
-    steal/load deltas plus the per-query steal map."""
+    steal/load deltas, the per-query steal map and ``failed_queries``."""
     timings: dict[str, float] = {}
     qsteal: dict[str, float] = {}
+    failed: dict[str, str] = {}
     reran: list[str] = []
     phase_steal0, phase_load0 = _steal_cpu_s(), _load1()
     for name in HEADLINE:
@@ -485,13 +490,18 @@ def _time_set(
             # and amortized at 100 TB — including it made half the batch
             # surface read as regressed in the round-5 preview when
             # execution was flat.
-            if name in SINGLE_RUN or name in EAGER_FN:
-                t0 = time.perf_counter()
-                df = specs[name].fn(spark, sf_dir)
-            else:
-                df = specs[name].fn(spark, sf_dir)
-                t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
+            try:
+                if name in SINGLE_RUN or name in EAGER_FN:
+                    t0 = time.perf_counter()
+                    df = specs[name].fn(spark, sf_dir)
+                else:
+                    df = specs[name].fn(spark, sf_dir)
+                    t0 = time.perf_counter()
+                df.write.mode("overwrite").format("noop").save()
+            except Exception as e:
+                traceback.print_exc()
+                failed[name] = type(e).__name__
+                break
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
             s1 = _steal_cpu_s()
@@ -520,7 +530,8 @@ def _time_set(
                 # sample, same bound and artifact field
                 reran.append(name)
                 n_runs += 1
-        timings[name] = round(best, 3)
+        if name not in failed:
+            timings[name] = round(best, 3)
         if steal_q >= 0.05:
             qsteal[name] = round(steal_q, 2)
         # Queries that persist an internal stage boundary (x28's cleaning
@@ -539,6 +550,7 @@ def _time_set(
         "load1": [phase_load0, phase_load1],
         "steal_per_query": qsteal,
         "polluted_reruns": reran,
+        "failed_queries": failed,
     }
     return timings, weather
 
@@ -665,9 +677,7 @@ def main() -> None:
     # flat-or-faster. "value" stays the honest total; "value_batch" is
     # the like-for-like scan/shuffle/agg surface.
     fixed_cost = SINGLE_RUN
-    batch_total = round(
-        sum(v for n, v in timings.items() if n not in fixed_cost), 3
-    )
+    failed = weather["failed_queries"]
     # The PRINTED line must fit entirely inside the driver's ~2 kB stdout
     # tail window or the parse fails (rounds 5-9 all recorded
     # "parsed": null — round 8's reorder saved the queries dict visually
@@ -702,11 +712,16 @@ def main() -> None:
         # if the line outgrows the tail budget (queries survive longer).
         "steal_per_query": weather["steal_per_query"],
         "queries": timings,
-        "value_batch": batch_total,
-        "value_fixed_cost": round(
+        # a query that raised has no timing: every total is then null,
+        # so a partial sum is never read as the full headline
+        "failed_queries": failed,
+        "value_batch": None if failed else round(
+            sum(v for n, v in timings.items() if n not in fixed_cost), 3
+        ),
+        "value_fixed_cost": None if failed else round(
             sum(v for n, v in timings.items() if n in fixed_cost), 3
         ),
-        "value": round(sum(timings.values()), 3),
+        "value": None if failed else round(sum(timings.values()), 3),
     }
     line, warnings = fit_tail(out)
     artifact = artifact_path()
@@ -738,6 +753,8 @@ def main() -> None:
         pass
     spark.stop()
     print(line, flush=True)
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -166,7 +166,9 @@ def run_cdc_merge_stream(
     ``maintain_live_commits=N`` (snapshot mode only) is the same
     in-stream rewrite cadence as ``run_rollup_stream``'s: each touched
     bucket gains a commit-dir entry per micro-batch, so a long-running
-    merge stream otherwise accumulates per-commit scans without bound;
+    merge stream otherwise accumulates manifest entries and small files
+    without bound (not scans: commits with one read signature share a
+    scan, and every bucket value has the same ``int`` type token);
     :func:`.snapshots.snapshot_maintain` no-ops below N live commits
     and folds + expires above it, with the high-water mark inherited
     through the maintenance commits (replay across the fold stays

@@ -107,6 +107,8 @@ def incremental_view_refresh(
     state tables' rewrite cadence cures), so above N live commit dirs
     the refresh runs ``snapshot_maintain`` on the view after its
     overwrite; the consumed-version mark inherits through the fold.
+    The cadence bounds manifest size and file count; the view's read
+    already costs one scan per read signature, not one per commit.
 
     A range that yields zero change rows (pure compaction / consume
     marks) advances the mark with a meta-only commit, so it is never

@@ -394,8 +394,11 @@ def run_rollup_stream(
     :func:`.snapshots.snapshot_maintain`, a manifest-read no-op until
     the live snapshot references > N commit directories, then one
     rewrite + expire. Without it, every micro-batch adds a commit to
-    each touched date partition and a week-old maintained table pays a
-    week of per-commit scans on every read. Safe mid-stream by
+    each touched date partition and a week-old maintained table reads a
+    week of manifest entries and small files on every read. The scan
+    count is bounded by read signature, not by this cadence: commits
+    that touched the same set of dates share one scan (a date value
+    stands for itself in the signature). Safe mid-stream by
     construction: the rewrite/expire maintenance commits INHERIT the
     manifest meta, so the batch-id high-water mark rides through the
     fold and a batch replayed across the rewrite is still skipped

@@ -73,7 +73,7 @@ commits-touching-them) entries, compacted by :func:`snapshot_rewrite`
 (which also bounds small files AND folds the manifest-entry list and
 any merge-on-read delete entries; :func:`snapshot_expire` then reclaims
 superseded directories, roots, unreferenced commit manifests and delete
-files). Reads reconstruct partition columns per commit directory via
+files). Reads reconstruct partition columns against the data root via
 ``basePath``, so partition pruning still reaches the scan
 (plan-asserted in tests). Row-level deletes have a merge-on-read form
 (:func:`snapshot_delete_keys`: key files anti-joined at read for
@@ -2457,50 +2457,57 @@ def _read_dirs(
     return _read_dirs_raw(spark, table, all_dirs, manifest)
 
 
+def _ptype(raw: str) -> str:
+    """A raw partition value's type token: the type Spark infers for it
+    where the value's shape makes that certain (``null``, ``int``,
+    ``bigint``); any other value stands for itself."""
+    if raw == "__HIVE_DEFAULT_PARTITION__":
+        return "null"
+    if re.fullmatch(r"[+-]?[0-9]+", raw):
+        n = int(raw)
+        if -(1 << 31) <= n < 1 << 31:
+            return "int"
+        if -(1 << 63) <= n < 1 << 63:
+            return "bigint"
+    return "=" + raw
+
+
+def _read_signature(manifest: dict, commit_id: str, dirs: list[str]) -> str:
+    """The READ SIGNATURE of ``dirs`` (all of commit ``commit_id``):
+    everything that shapes the columns of a scan over them — the
+    commit's recorded schema (``cschemas``), column map and drop list,
+    the ordered partition-key names, and per key the SET of
+    :func:`_ptype` tokens of its values. Dir sets with equal signatures
+    scan to equal columns and types, alone or read together, because
+    equal token sets make Spark's joint partition-type inference equal
+    too. A commit with no recorded schema is its own signature."""
+    pvals = [_dir_pvals(d) for d in dirs]
+    return json.dumps(
+        [
+            manifest.get("cschemas", {}).get(commit_id, commit_id),
+            sorted(manifest.get("colmaps", {}).get(commit_id, {}).items()),
+            sorted(manifest.get("dropcols", {}).get(commit_id, ())),
+            sorted({tuple(p) for p in pvals}),
+            sorted({(k, _ptype(v)) for p in pvals for k, v in p.items()}),
+        ]
+    )
+
+
 def _read_empty(spark: SparkSession, table: str, manifest: dict) -> DataFrame:
     """A ZERO-ROW frame with the columns a full read of ``manifest``'s
-    (non-empty) snapshot has, scanning one dir per distinct READ
-    SIGNATURE and then ``limit(0)`` (prunes at the source). The
-    signature is everything that shapes a dir's columns: its commit's
-    recorded schema, column map and drop list, and per partition key
-    its name and the type Spark infers for its value. Every signature
-    is read, so the frame keeps the full additive-evolution column
-    union and widens partition types exactly as the full read does; a
-    uniform table lists one dir, not one per commit. A commit with no
-    recorded schema is its own signature."""
-
-    def ptype(raw: str) -> str:
-        # the inferred type where it is certain from the value's shape
-        # (NULL, int, bigint); any other value stands for itself
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            return "null"
-        if re.fullmatch(r"[+-]?[0-9]+", raw):
-            n = int(raw)
-            if -(1 << 31) <= n < 1 << 31:
-                return "int"
-            if -(1 << 63) <= n < 1 << 63:
-                return "bigint"
-        return "=" + raw
-
-    cschemas = manifest.get("cschemas", {})
-    colmaps = manifest.get("colmaps", {})
-    dropm = manifest.get("dropcols", {})
+    (non-empty) snapshot has, scanning one dir per distinct
+    :func:`_read_signature` and then ``limit(0)`` (prunes at the
+    source). Every signature is read, so the frame keeps the full
+    additive-evolution column union and widens partition types exactly
+    as the full read does; a uniform table lists one dir, not one per
+    commit."""
     reps: dict[str, str] = {}
     for d in sorted(x for ds in manifest["partitions"].values() for x in ds):
-        commit = d.split("/")[1]
-        sig = json.dumps(
-            [
-                cschemas.get(commit, commit),
-                sorted(colmaps.get(commit, {}).items()),
-                sorted(dropm.get(commit, ())),
-                [[k, ptype(v)] for k, v in _dir_pvals(d).items()],
-            ]
-        )
-        reps.setdefault(sig, d)
+        reps.setdefault(_read_signature(manifest, d.split("/")[1], [d]), d)
     return _read_dirs(spark, table, sorted(reps.values()), manifest).limit(0)
 
 
-#: Constructed-frame memo: building a per-commit scan LISTS its dirs
+#: Constructed-frame memo: building a commit scan LISTS its dirs
 #: driver-side (and, for a commit with no recorded schema, runs a
 #: schema-inference job), so a snapshot_read costs real sequential wall
 #: BEFORE any of its own jobs run (a protocol exercise like x44 resolves
@@ -2563,12 +2570,90 @@ def _read_dirs_raw(
     return out
 
 
+def _apply_colmap(manifest: dict, commit_id: str, f: DataFrame) -> DataFrame:
+    """``f`` (a scan of ``commit_id``'s files) with the version's logical
+    names: rename/drop evolution (round 12) maps physical file columns
+    to the manifest's CURRENT names per commit (``colmaps``) and
+    projects per-commit dropped columns away — a rename or drop is a
+    metadata commit, never a rewrite; time travel applies each
+    version's OWN maps, so every version shows its own names."""
+    m = manifest.get("colmaps", {}).get(commit_id, {})
+    drop = set(manifest.get("dropcols", {}).get(commit_id, ()))
+    if not m and not drop:
+        return f
+    return f.select(
+        *[F.col(c).alias(m.get(c, c)) for c in f.columns if c not in drop]
+    )
+
+
+def _commit_scans(
+    spark: SparkSession, table: str, by_commit: dict[str, list[str]],
+    manifest: dict,
+) -> list[DataFrame]:
+    """One pinned multi-path FileScan per :func:`_read_signature` of the
+    commits in ``by_commit`` (commit id -> its table-relative dirs), in
+    the order of each scan's first commit id: the union's types — and
+    the family gate in :func:`_read_dirs_raw_build` — see what a scan
+    per commit would. Each scan reads with ``basePath=<table>/data`` plus
+    ``ignoreInvalidPartitionPaths``: the commit uuid level parses as no
+    partition, which Spark otherwise rejects as conflicting directory
+    structures across uuids; the option lifts only that assertion, and
+    every dir of a group carries the full, identical key sequence, so
+    none can parse as invalid. Unpartitioned commits are the zero-key
+    case.
+
+    Each scan is PINNED to the recorded data schema
+    (:func:`_pinned_reader`), so building it only LISTS its dirs
+    driver-side: an unpinned parquet read runs a schema-inference Spark
+    job first. Partition columns still infer from the dir names; a
+    commit with no usable recorded schema keeps the inferred read. A
+    group splits into chunks of at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` root
+    paths: above it Spark lists the paths with a Spark job instead of
+    on the driver. The independent builds run on a small thread pool
+    (listing is a sequential round-trip per dir)."""
+    groups: dict[str, list[str]] = {}
+    for commit_id, dirs in sorted(by_commit.items()):
+        sig = _read_signature(manifest, commit_id, dirs)
+        groups.setdefault(sig, []).extend(sorted(dirs))
+    limit = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    )
+    # (first commit id, table-relative dirs)
+    specs = [
+        (dirs[i].split("/")[1], dirs[i:i + limit])
+        for dirs in groups.values()
+        for i in range(0, len(dirs), limit)
+    ]
+
+    def _build(spec):
+        cid, dirs = spec
+        f = (
+            _pinned_reader(spark, manifest.get("cschemas", {}).get(cid))
+            .option("basePath", f"{table}/data")
+            .option("ignoreInvalidPartitionPaths", "true")
+            .parquet(*[f"{table}/{d}" for d in dirs])
+        )
+        return _apply_colmap(manifest, cid, f)
+
+    specs.sort(key=lambda s: s[0])
+    if len(specs) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(min(8, len(specs))) as pool:
+            return list(pool.map(_build, specs))
+    return [_build(s) for s in specs]
+
+
 def _read_dirs_raw_build(
     spark: SparkSession, table: str, all_dirs: list[str], manifest: dict
 ) -> DataFrame:
-    """Union scan of specific table-relative commit dirs.
+    """Union scan of specific table-relative commit dirs: one scan per
+    read signature (:func:`_commit_scans`), so a long history of
+    uniform commits — partitioned or not — reads with a handful of
+    scans, not one per commit (plan-asserted in tests).
 
-    Partition columns reconstruct per commit directory (basePath); the
+    Partition columns reconstruct against the table's data root; the
     union preserves them, so partition filters prune inside every
     referenced directory. MIXED layouts (an unpartitioned commit beside
     partitioned ones) would otherwise expose a column ORDER decided by
@@ -2598,7 +2683,7 @@ def _read_dirs_raw_build(
 
     Partition columns get a FAMILY-level version of the same check
     instead of an exemption: their types re-infer from path strings per
-    commit (never evolved), and in a MIXED layout the same name can also
+    scan (never evolved), and in a MIXED layout the same name can also
     appear as a real data column (supported — the rewrite tests pin it),
     so exact types legitimately differ (``p=3`` paths infer ``int``
     beside a ``bigint`` data column — Spark's union upcasts
@@ -2608,103 +2693,10 @@ def _read_dirs_raw_build(
     the write-time gate can't see, because partition VALUES aren't in
     the frame it checks. Families: integral / fractional / timestamp /
     everything else exact."""
-    _family = _type_family
-
     by_commit: dict[str, list[str]] = {}
     for d in all_dirs:
         by_commit.setdefault(d.split("/")[1], []).append(d)  # data/<uuid>/...
-    # Bound the plan for long histories: UNPARTITIONED commits whose
-    # manifest-recorded schemas (cschemas, written per commit) are
-    # identical collapse into ONE multi-path FileScan — a maintained
-    # unpartitioned table with hundreds of small commits reads with a
-    # handful of scans instead of one per commit (plan-asserted in
-    # tests). Partitioned commits keep one scan each: their partition
-    # columns reconstruct against a per-commit basePath, and Spark
-    # rejects a shared basePath across the uuid level ("conflicting
-    # directory structures" — verified empirically); their escape valve
-    # is the rewrite cadence (snapshot_rewrite folds all live commits
-    # into one, so the steady-state scan count is the commits since the
-    # last rewrite — documented maintenance contract). Commits without
-    # a recorded schema (pre-upgrade tables) also scan individually.
-    # rename/drop evolution (round 12): physical file columns map to the
-    # manifest's CURRENT logical names per commit (``colmaps``), and
-    # per-commit dropped physical columns are projected away — a rename
-    # or drop is a metadata commit, never a rewrite; time travel applies
-    # each version's OWN maps, so every version shows its own names
-    colmaps = manifest.get("colmaps", {})
-    dropm = manifest.get("dropcols", {})
-
-    def apply_map(commit_id: str, f: DataFrame) -> DataFrame:
-        m = colmaps.get(commit_id, {})
-        drop = set(dropm.get(commit_id, ()))
-        if not m and not drop:
-            return f
-        return f.select(
-            *[
-                F.col(c).alias(m.get(c, c))
-                for c in f.columns
-                if c not in drop
-            ]
-        )
-
-    # (commit, basePath, paths, recorded schema or None)
-    scan_specs: list[tuple[str, str | None, list[str], list | None]] = []
-    flat_groups: dict[str, list[str]] = {}
-    flat_first: dict[str, str] = {}
-    cschemas = manifest.get("cschemas", {})
-    for commit_id, dirs in sorted(by_commit.items()):
-        flat = dirs == [f"data/{commit_id}"]
-        sch = cschemas.get(commit_id)
-        if flat and sch is not None:
-            # the scan-group key includes the commit's column map and
-            # drop list: commits with identical physical schemas but
-            # DIFFERENT logical mappings must not share one scan
-            key = json.dumps(
-                [
-                    sch,
-                    sorted(colmaps.get(commit_id, {}).items()),
-                    sorted(dropm.get(commit_id, ())),
-                ]
-            )
-            flat_first.setdefault(key, commit_id)
-            flat_groups.setdefault(key, []).append(f"{table}/data/{commit_id}")
-        else:
-            scan_specs.append(
-                (
-                    commit_id,
-                    f"{table}/data/{commit_id}",
-                    [f"{table}/{d}" for d in sorted(dirs)],
-                    sch,
-                )
-            )
-    for key, paths in flat_groups.items():
-        cid = flat_first[key]
-        scan_specs.append((cid, None, sorted(paths), cschemas[cid]))
-
-    # Each scan is PINNED to its commit's recorded data schema
-    # (:func:`_pinned_reader`), so building it only LISTS its dirs
-    # driver-side: an unpinned parquet read runs a schema-inference Spark
-    # job per scan before the query's own jobs. Partition columns still
-    # infer from the dir names (the pinned schema holds data columns
-    # only). A commit with no usable recorded schema (pre-upgrade tables)
-    # keeps the inferred read. Listing is still one sequential round-trip
-    # per dir, so the independent builds run on a small thread pool and
-    # keep the deterministic commit-id order.
-    def _build(spec):
-        cid, base_path, paths, sch = spec
-        reader = _pinned_reader(spark, sch)
-        if base_path is not None:
-            reader = reader.option("basePath", base_path)
-        return cid, apply_map(cid, reader.parquet(*paths))
-
-    if len(scan_specs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(min(8, len(scan_specs))) as pool:
-            groups = list(pool.map(_build, scan_specs))
-    else:
-        groups = [_build(s) for s in scan_specs]
-    frames = [f for _, f in sorted(groups, key=lambda g: g[0])]
+    frames = _commit_scans(spark, table, by_commit, manifest)
     pcols = _manifest_pcols(manifest["partitions"])
     seen_types: dict[str, str] = {}
     seen_fams: dict[str, str] = {}
@@ -2712,7 +2704,11 @@ def _read_dirs_raw_build(
         for fld in f.schema.fields:
             t = fld.dataType.simpleString()  # nullability-insensitive
             if fld.name in pcols:
-                fam = _family(t)
+                if t == "void":
+                    # an all-NULL partition key carries no value to
+                    # cast: the union widens it to any type
+                    continue
+                fam = _type_family(t)
                 pfam = seen_fams.setdefault(fld.name, fam)
                 if pfam != fam:
                     raise ValueError(

@@ -2,11 +2,16 @@
 schema the manifest recorded for it (``cschemas``), so building a read
 runs no parquet schema-inference job.
 
+Commits with one read signature share one scan, partitioned or not.
+
 Pins the job counts of a lookup, an all-pruned lookup and a read-back;
 checks the pinned read against an inferred-read oracle (same rows, same
-schema) across the schema-evolution shapes; checks that a commit with no
-recorded schema still reads through inference; and checks the
-zero-row frame of a provably empty result against the full read."""
+schema) across the schema-evolution shapes; checks the grouped read
+against a per-commit oracle (one ``basePath``-per-commit scan per
+commit, unioned by name) across partition-value and evolution shapes;
+checks that a commit with no recorded schema still reads through
+inference; and checks the zero-row frame of a provably empty result
+against the full read."""
 
 from __future__ import annotations
 
@@ -248,3 +253,136 @@ def test_empty_lookup_schema_equals_full_read_across_evolution(spark, table):
     assert full.schema["q"].dataType.simpleString() == "bigint"
     assert empty.schema == full.schema
     assert empty.count() == 0
+
+
+def _n_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("Scan parquet")
+
+
+def _per_commit_scans(spark, table, by_commit, manifest):
+    """The reference for :func:`snap._commit_scans`: one scan per commit
+    with the commit dir as ``basePath`` (the read before commits with
+    one read signature shared a scan)."""
+    cschemas = manifest.get("cschemas", {})
+    return [
+        snap._apply_colmap(
+            manifest,
+            cid,
+            snap._pinned_reader(spark, cschemas.get(cid))
+            .option("basePath", f"{table}/data/{cid}")
+            .parquet(*[f"{table}/{d}" for d in sorted(dirs)]),
+        )
+        for cid, dirs in sorted(by_commit.items())
+    ]
+
+
+def _per_commit(monkeypatch, fn):
+    """``fn()`` with every commit scanned on its own, then unioned by
+    name, as the oracle for the grouped read."""
+    with monkeypatch.context() as mp:
+        mp.setattr(snap, "_commit_scans", _per_commit_scans)
+        snap._FRAME_MEMO.clear()
+        out = fn()
+    snap._FRAME_MEMO.clear()
+    return out
+
+
+def _trickle_shaped(spark, table):
+    # the ingest layout: a string topic, then int event-time keys; each
+    # commit lands two hours
+    for c in range(4):
+        rows = [(c * 10 + i, "lnd.ratecard", 2024, 3, 1 + c, i % 2) for i in range(6)]
+        snapshot_append(spark, table, spark.createDataFrame(
+            rows, "id long, topic string, y int, m int, d int, h int"),
+            ["topic", "y", "m", "d", "h"])
+
+
+def _int_vs_bigint(spark, table):
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(1, 1), (2, 2)], "id long, q long"), ["q"])
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(3, 3_000_000_000)], "id long, q long"), ["q"])
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(4, 5)], "id long, q long"), ["q"])
+
+
+def _null_beside_int(spark, table):
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(1, 1)], "id long, q long"), ["q"])
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(2, None)], "id long, q long"), ["q"])
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(3, 2), (4, None)], "id long, q long"), ["q"])
+
+
+#: scans a grouped read of the shape takes, where the shape pins it: the
+#: trickle commits share one signature; an int and a bigint value of q
+#: are two (joint inference would widen the int commits' q)
+_SCANS = {_trickle_shaped: 1, _int_vs_bigint: 2}
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _trickle_shaped,
+        _int_vs_bigint,
+        _null_beside_int,
+        _evo_added,
+        _evo_renamed,
+        _evo_dropped,
+        _evo_mixed_layout,
+        _evo_hidden_transform,
+        _evo_mor_deleted,
+        _evo_stripped,
+    ],
+    ids=lambda f: f.__name__.lstrip("_").removeprefix("evo_"),
+)
+def test_grouped_read_equals_per_commit_union(spark, table, monkeypatch, build):
+    build(spark, table)
+    snap._FRAME_MEMO.clear()
+    got = snapshot_read(spark, table)
+    want = _per_commit(monkeypatch, lambda: snapshot_read(spark, table))
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    if build in _SCANS:
+        assert _n_scans(got) == _SCANS[build]
+
+
+def test_null_only_partition_commit_reads_beside_int_commits(spark, table):
+    # the NULL-only commit infers q as void; the union widens it to int
+    _null_beside_int(spark, table)
+    got = snapshot_read(spark, table)
+    assert got.schema["q"].dataType.simpleString() == "int"
+    assert sorted((r["id"], r["q"]) for r in got.collect()) == [
+        (1, 1), (2, None), (3, 2), (4, None)
+    ]
+
+
+def test_date_and_string_partition_commits_still_raise(spark, table, monkeypatch):
+    # one commit's p infers date, the next one's string: separate read
+    # signatures, and the union still hits the partition-family gate
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(1, "2024-01-01")], "id long, p string"), ["p"])
+    snapshot_append(spark, table, spark.createDataFrame(
+        [(2, "abc")], "id long, p string"), ["p"])
+    for read in (
+        lambda: snapshot_read(spark, table),
+        lambda: _per_commit(monkeypatch, lambda: snapshot_read(spark, table)),
+    ):
+        snap._FRAME_MEMO.clear()
+        with pytest.raises(ValueError, match="mixes incompatible types"):
+            read()
+
+
+def test_building_a_long_partitioned_read_lists_on_the_driver(spark, table):
+    """40 partition dirs over 20 commits: above Spark's parallel-listing
+    threshold (32 root paths) a single scan would list them with a Spark
+    job, so the group splits into two scans and building runs none."""
+    for c in range(20):
+        snapshot_append(spark, table, spark.createDataFrame(
+            [(c, "a"), (c, "b")], "id long, p string"), ["p"])
+    snap._FRAME_MEMO.clear()
+    built = []
+    assert _jobs_in(spark, lambda: built.append(snapshot_read(spark, table))) == 0
+    assert _n_scans(built[0]) <= 2
+    assert built[0].count() == 40

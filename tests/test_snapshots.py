@@ -1844,16 +1844,19 @@ def test_mixed_layout_partition_type_family_gate(spark, tmp_path):
 
 
 def test_long_history_read_plan_bounded(spark, tmp_path):
-    """50 small unpartitioned commits read with a HANDFUL of FileScans,
-    not one per commit: same-schema commits collapse into one multi-path
-    scan via the manifest's per-commit schemas. An additive-evolution
-    commit opens one more group (its own scan), never per-commit plans.
-    Partitioned tables bound their scan count via the rewrite cadence
-    instead (snapshot_rewrite folds all live commits into one) —
-    asserted here too."""
+    """Long histories read with a HANDFUL of FileScans, not one per
+    commit: commits with one read signature (recorded schema, column
+    maps, partition keys and value-type tokens) share a multi-path scan,
+    split only at Spark's parallel-listing threshold (32 root paths) so
+    building the read lists on the driver and runs no Spark job. An
+    additive-evolution commit opens one more group (its own scan);
+    partitioned commits group too, one scan per distinct set of
+    string partition values."""
     from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
         snapshot_rewrite,
     )
+
+    from .conftest import jobs_in
 
     def n_scans(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1865,10 +1868,12 @@ def test_long_history_read_plan_bounded(spark, tmp_path):
             spark, table,
             spark.createDataFrame([(i, i * 10)], "k long, v long"),
         )
-    df = snapshot_read(spark, table)
+    built = []
+    assert jobs_in(spark, lambda: built.append(snapshot_read(spark, table))) == 0
+    df = built[0]
     assert df.count() == 50
     assert sorted(r["k"] for r in df.collect()) == list(range(50))
-    assert n_scans(df) == 1  # 50 same-schema commits, ONE scan
+    assert n_scans(df) == 2  # 50 same-schema commits: 32 + 18 root paths
 
     # additive evolution: the new-schema commits form ONE more group
     for i in range(50, 55):
@@ -1879,14 +1884,13 @@ def test_long_history_read_plan_bounded(spark, tmp_path):
         )
     df2 = snapshot_read(spark, table)
     assert df2.count() == 55 and "lang" in df2.columns
-    assert n_scans(df2) == 2
+    assert n_scans(df2) == 3
     # old commits NULL-fill the evolved column through the grouped scan
     assert df2.filter("k < 50 and lang is not null").count() == 0
     assert df2.filter("k >= 50 and lang = 'en'").count() == 5
 
-    # partitioned histories: per-commit scans by design; the rewrite
-    # cadence is the bound — one commit (= #partitions dirs, 1 scan
-    # group per commit) afterwards
+    # partitioned histories group too: the p=a commits share one scan,
+    # the p=b commits another (a string value is its own type token)
     pt = str(tmp_path / "pt")
     for i in range(10):
         snapshot_append(
@@ -1894,7 +1898,9 @@ def test_long_history_read_plan_bounded(spark, tmp_path):
             spark.createDataFrame([(i, "a" if i % 2 else "b", i)],
                                   "k long, p string, v long"), ["p"],
         )
-    assert n_scans(snapshot_read(spark, pt)) == 10
+    dfp = snapshot_read(spark, pt)
+    assert n_scans(dfp) == 2 and dfp.count() == 10
+    assert dfp.filter("p = 'a'").count() == 5
     snapshot_rewrite(spark, pt, ["p"])
     dfp = snapshot_read(spark, pt)
     assert n_scans(dfp) == 1 and dfp.count() == 10
