@@ -40,7 +40,7 @@ from .dedup import latest_by_key
 
 # Shared maintenance plumbing (FS-API marker + emptiness probe): one
 # implementation for every continuously-maintained table in the engine.
-from .metafile import _fs_path, _read_text
+from .metafile import _fs_path, _jclass, _read_text
 from .rollup import (
     _guard_no_inplace_data,
     _is_absent_or_empty,
@@ -508,11 +508,9 @@ def purge_tombstones(
     # data — a bucket whose every row expired produces none and would keep
     # its old file forever. Drop those bucket dirs through the FS API.
     fs, _ = _fs_path(spark, path)
+    jpath = _jclass(spark, "org.apache.hadoop.fs.Path")
     for b in set(affected_ids) - surviving_ids:
-        fs.delete(
-            spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"bucket={b}")),
-            True,
-        )
+        fs.delete(jpath(os.path.join(path, f"bucket={b}")), True)
     return n_purged
 
 

@@ -15,23 +15,81 @@ each protocol the engine publishes its metadata through.
 
 All three writers take ``str`` (written as UTF-8) or ``bytes``. Paths
 resolve through :func:`_fs_path`, so every protocol works on any
-supported scheme (local, hdfs, s3a). No package imports: every module
-may import this one.
+supported scheme (local, hdfs, s3a); :func:`_glob` lists a dir's
+matching children in a fixed number of JVM calls. JVM classes are
+reached through :func:`_jclass`. No package imports: every module may
+import this one.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 import uuid
 
+from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
+
+
+class _Class(JavaClass):
+    """A :class:`JavaClass` that resolves each static member once: py4j
+    otherwise asks the JVM what ``Cls.name`` is on every access."""
+
+    def __getattr__(self, name):
+        member = super().__getattr__(name)
+        object.__setattr__(self, name, member)
+        return member
+
+
+@functools.lru_cache(maxsize=64)
+def _class_on(gateway_client, fqn: str) -> _Class:
+    return _Class(fqn, gateway_client)
+
+
+def _jclass(spark, fqn: str) -> JavaClass:
+    """The JVM class ``fqn`` (``$`` before a nested class's name).
+    Walking to a class through ``spark._jvm`` attribute by attribute
+    costs one py4j round trip per package level on every use (six for a
+    Hadoop class); this proxy is built once per gateway and costs none."""
+    return _class_on(spark._jvm._gateway_client, fqn)
 
 
 def _fs_path(spark, path: str):
     """Hadoop FileSystem + Path for ``path`` — resolved through the JVM so
     metadata works on any supported scheme (local, hdfs, s3a) exactly
     like the tables beside it, not just local disk."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _glob_escape(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped, so it matches
+    only itself."""
+    return re.sub(r"([\\*?\[\]{}])", r"\\\1", path)
+
+
+def _glob(spark, literal: str, pattern: str) -> list[str]:
+    """The paths under dir ``literal`` that match the glob ``pattern``,
+    relative to ``literal`` (``latest-*`` -> ``["latest-00003", ...]``);
+    ``[]`` when none match or ``literal`` is absent. ``literal`` matches
+    as written, metacharacters and all. Eight JVM calls at most, however
+    many paths match: the listing comes back as ONE string (reading each
+    returned status costs three calls), cut at the qualified prefix so a
+    comma in a table path or a partition value never splits an entry."""
+    fs, hpat = _fs_path(spark, f"{_glob_escape(literal.rstrip('/'))}/{pattern}")
+    statuses = fs.globStatus(hpat)
+    if statuses is None:
+        return []
+    listing = _jclass(spark, "org.apache.commons.lang3.ArrayUtils").toString(
+        _jclass(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(statuses)
+    )[1:-1]
+    if not listing:
+        return []
+    qualified = fs.makeQualified(hpat).toString()
+    prefix = re.sub(r"\\(.)", r"\1", qualified[: len(qualified) - len(pattern)])
+    if not listing.startswith(prefix):
+        raise RuntimeError(f"glob of {qualified!r} listed {listing!r}")
+    return listing[len(prefix):].split("," + prefix)
 
 
 def _read_bytes(spark, path: str) -> bytes | None:
@@ -93,7 +151,7 @@ def _file_context(spark, hpath):
     """Hadoop ``FileContext`` for ``hpath``'s filesystem: the API whose
     rename can overwrite (``FileSystem.rename`` refuses an existing
     destination)."""
-    return spark._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+    return _jclass(spark, "org.apache.hadoop.fs.FileContext").getFileContext(
         hpath.toUri(), spark._jsc.hadoopConfiguration()
     )
 
@@ -117,7 +175,7 @@ def _replace_text(spark, path: str, content: str | bytes) -> None:
     fs, final = _fs_path(spark, path)
     tmp = final.suffix(f".tmp-{uuid.uuid4().hex}")
     _write_stream(fs, tmp, content)
-    rename = spark._jvm.org.apache.hadoop.fs.Options.Rename
+    rename = _jclass(spark, "org.apache.hadoop.fs.Options$Rename")
     overwrite = spark.sparkContext._gateway.new_array(rename, 1)
     overwrite[0] = rename.OVERWRITE
     try:

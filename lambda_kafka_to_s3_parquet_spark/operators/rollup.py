@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .metafile import _fs_path, _read_text, _write_in_place
+from .metafile import _glob, _read_text, _write_in_place
 
 #: THE mergeable-aggregate spec — the one place the rollup schema contract
 #: lives. Each column name maps to (build, merge):
@@ -229,24 +229,14 @@ def _is_absent_or_empty(spark: SparkSession, path: str) -> bool:
     ``.crc``) don't count as data — Spark's parquet reader ignores them
     too, so this matches exactly the set of files a read would load.
     """
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return True
-    for status in fs.listStatus(p):
-        if not status.getPath().getName().startswith(("_", ".")):
-            return False
-    return True
+    return all(name.startswith(("_", ".")) for name in _glob(spark, path, "*"))
 
 
 def _guard_no_inplace_data(spark: SparkSession, path: str) -> None:
     """Raise when ``path`` holds in-place (bucket=N / d=...) data but no
     snapshot metadata: flipping a stream to commit_protocol='snapshot'
     must be an explicit migration, never a silent restart from empty."""
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
+    for name in _glob(spark, path, "*"):
         if not name.startswith(("_", ".")) and name != "data":
             raise ValueError(
                 f"{path} holds an existing in-place table (found {name!r}); "

@@ -100,7 +100,15 @@ from pyspark.sql.types import StructType, _parse_datatype_string
 # Module-level names on purpose: monkeypatching them here intercepts
 # every snapshot commit and read (_replace_text is re-exported for
 # callers that rewrite a manifest in place).
-from .metafile import _create_atomic, _read_text, _replace_text  # noqa: F401
+from .metafile import (  # noqa: F401
+    _create_atomic,
+    _fs_path,
+    _glob,
+    _jclass,
+    _glob_escape,
+    _read_text,
+    _replace_text,
+)
 
 _SNAP_DIR = "_snapshots"
 _MARKER_RE = re.compile(r"^latest-(\d+)$")
@@ -117,12 +125,6 @@ class SnapshotConflictError(RuntimeError):
     class cannot rebase (replacement commits read the old base; blindly
     retrying could silently undo the winner). The loser's data dirs are
     unreferenced orphans — :func:`snapshot_expire` reclaims them."""
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
 def _now() -> float:
@@ -219,40 +221,27 @@ def current_version(
     spark: SparkSession, table: str, branch: str | None = None
 ) -> int:
     """Latest COMMITTED snapshot version (0 = empty/uninitialized): the
-    max ``latest-<version>`` marker present. Globs ONLY the markers —
-    this is the hot metadata call (2-3x per verb), and iterating the
-    whole ``_snapshots`` listing pays per-entry JVM round-trips for the
-    roots/commit-manifests too (measured ~3x the wall on a 40-commit
-    table; the round-13 two-level stress row exposed it).
+    max ``latest-<version>`` marker present. This is the hot metadata
+    call (2-3x per verb), so it costs a fixed number of JVM calls
+    however many versions the table keeps: one :func:`.metafile._glob`
+    of the markers, whose names come back in one string (reading them
+    one status at a time cost 3 calls per marker). The table path
+    matches literally, so ``[`` or ``{`` in it never turns the glob
+    into a pattern that matches nothing.
 
     With ``branch``, the branch's HEAD: the max ``ref-<name>-*`` marker,
     or the fork point when the branch has no commits of its own yet."""
-    fs, jvm = _fs(spark, table)
-    if branch is not None:
+    if branch is None:
+        prefix, best = "latest-", 0
+    else:
         bmeta = _branch_meta(spark, table, branch)
         if bmeta is None:
             raise KeyError(f"unknown branch {branch!r} on {table}")
-        pattern = jvm.org.apache.hadoop.fs.Path(
-            f"{table}/{_SNAP_DIR}/ref-{branch}-*"
-        )
-        statuses = fs.globStatus(pattern)
-        best = bmeta["from_version"]
-        prefix = f"ref-{branch}-"
-        for st in statuses or []:
-            name = st.getPath().getName()
-            tail = name[len(prefix):]
-            if tail.isdigit():
-                best = max(best, int(tail))
-        return best
-    pattern = jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}/latest-*")
-    statuses = fs.globStatus(pattern)
-    if statuses is None:
-        return 0
-    best = 0
-    for st in statuses:
-        m = _MARKER_RE.match(st.getPath().getName())
-        if m:
-            best = max(best, int(m.group(1)))
+        prefix, best = f"ref-{branch}-", bmeta["from_version"]
+    for name in _glob(spark, f"{table}/{_SNAP_DIR}", f"{_glob_escape(prefix)}*"):
+        tail = name[len(prefix):]
+        if tail.isdecimal():
+            best = max(best, int(tail))
     return best
 
 
@@ -276,8 +265,8 @@ def _publish_cas(
         _create_atomic(spark, marker, basename)
         return True
     except IOError:
-        fs, jvm = _fs(spark, table)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
+        fs, hmarker = _fs_path(spark, marker)
+        if fs.exists(hmarker):
             return False
         raise
 
@@ -535,8 +524,8 @@ def _load_manifest(
         # hole _load_root's re-resolve retry covers on the slow path: a
         # stale _RESOLVE_CACHE entry must never let a memo hit serve the
         # PREVIOUS table's view. ~1 fs call vs O(commits) re-merging.
-        fs, jvm = _fs(spark, table)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+        fs, hpath = _fs_path(spark, path)
+        if fs.exists(hpath):
             return view
         _ASSEMBLED_CACHE.pop(path, None)
         _RESOLVE_CACHE.pop((table, version), None)
@@ -590,10 +579,7 @@ def snapshot_history(
                 }
             )
         return sorted(out, key=lambda s: s["version"])
-    fs, jvm = _fs(spark, table)
-    snap = jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}")
-    if not fs.exists(snap):
-        return []
+    snap = f"{table}/{_SNAP_DIR}"
     # one listing yields both the marker set (version → committed
     # manifest basename: the ONLY files that are commits — a CAS loser's
     # token manifest at the same version is a phantom) and the legacy
@@ -602,13 +588,12 @@ def snapshot_history(
     committed = 0
     marked: dict[int, str] = {}
     legacy: dict[int, str] = {}
-    for st in fs.listStatus(snap):
-        name = st.getPath().getName()
+    for name in _glob(spark, snap, "*"):
         mm = _MARKER_RE.match(name)
         if mm:
             v = int(mm.group(1))
             committed = max(committed, v)
-            content = _read_text(spark, st.getPath().toString())
+            content = _read_text(spark, f"{snap}/{name}")
             if content is not None and _MANIFEST_FILE_RE.match(content.strip()):
                 marked[v] = content.strip()
             else:
@@ -623,7 +608,7 @@ def snapshot_history(
     for v, basename in marked.items():
         if v > committed:
             continue
-        txt = _read_text(spark, f"{table}/{_SNAP_DIR}/{basename}")
+        txt = _read_text(spark, f"{snap}/{basename}")
         if txt is None:
             continue  # expired by the maintenance writer mid-listing
         m = json.loads(txt)
@@ -662,26 +647,20 @@ def _write_commit_data(
     writer.parquet(commit_dir)
     if not partition_by:
         return [f"data/{commit}"]
-    fs, jvm = _fs(df.sparkSession, commit_dir)
-    rels: list[str] = []
-
-    def walk(path, rel, depth):
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name:
-                if depth + 1 == len(partition_by):
-                    rels.append(f"{rel}/{name}")
-                else:
-                    walk(f"{path}/{name}", f"{rel}/{name}", depth + 1)
-
-    walk(commit_dir, f"data/{commit}", 0)
+    # one glob at the leaf depth: every partition level is a ``k=v`` dir
+    # (Spark escapes ``=``, ``/`` and glob metacharacters in values), and
+    # Spark writes files only into the leaves
+    spark = df.sparkSession
+    leaves = "/".join(["*=*"] * len(partition_by))
+    rels = sorted(f"data/{commit}/{d}" for d in _glob(spark, commit_dir, leaves))
     if not rels:
         # An empty partitioned frame wrote only a _SUCCESS-bearing stub
         # dir that no manifest will ever reference; remove it, or a
         # polling writer (e.g. an incremental consumer whose transform
         # keeps filtering to empty) leaks one orphan dir per no-op that
         # snapshot_expire can't see.
-        fs.delete(jvm.org.apache.hadoop.fs.Path(commit_dir), True)
+        fs, hdir = _fs_path(spark, commit_dir)
+        fs.delete(hdir, True)
     return rels
 
 
@@ -792,6 +771,7 @@ def _collect_dir_pruning(
             StructType([f for f in df.schema.fields if f.name not in pset])
         )
         .option("basePath", base)
+        .option("__globPaths__", "false")
         .parquet(base)
     )
     for c in bloom_cols:
@@ -1068,13 +1048,18 @@ def _pinned_reader(spark: SparkSession, cschema: list | None):
     With no usable recorded schema — none recorded (pre-upgrade
     entries), or types that do not parse back to exactly what was
     recorded (a nested field name that would need quoting in DDL) — the
-    reader infers, as an unpinned read does."""
-    pinned = _parse_cschema(json.dumps(cschema)) if cschema else None
-    return spark.read if pinned is None else spark.read.schema(pinned)
+    reader infers, as an unpinned read does. Every path the engine
+    scans is a literal dir or file, so the reader does not glob them
+    (``[`` or ``{`` in a table path would otherwise match nothing)."""
+    reader = spark.read.option("__globPaths__", "false")
+    ddl = _parse_cschema(json.dumps(cschema)) if cschema else None
+    return reader if ddl is None else reader.schema(ddl)
 
 
 @functools.lru_cache(maxsize=256)
-def _parse_cschema(key: str) -> StructType | None:
+def _parse_cschema(key: str) -> str | None:
+    """The DDL that pins a recorded schema, or None when it does not
+    parse back to exactly the recorded types."""
     cschema = json.loads(key)
     ddl = ", ".join(
         "`{}` {}".format(name.replace("`", "``"), t) for name, t in cschema
@@ -1087,7 +1072,7 @@ def _parse_cschema(key: str) -> StructType | None:
         [f.name, f.dataType.simpleString()] for f in parsed.fields
     ] != cschema:
         return None
-    return parsed
+    return ddl
 
 
 def _commit(
@@ -1597,8 +1582,8 @@ def _commit(
         # best-effort (expire vacuums stragglers), then rebase or stop.
         # The commit-manifest file is KEPT: a rebase reuses it verbatim
         # (immutable content), a fail-stop orphans it for expire.
-        fs, jvm = _fs(spark, table)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(mpath), False)
+        fs, hmpath = _fs_path(spark, mpath)
+        fs.delete(hmpath, False)
         attempt += 1
         # replacement-class fail-stop happens at the TOP of the next
         # iteration (the same path a moved-base first attempt takes)
@@ -2661,7 +2646,9 @@ def _read_dirs_raw_build(
     nondeterministic): unionByName aligns names but keeps frame[0]'s
     order, and partition columns read back AFTER the data columns only
     for partitioned commits. Canonicalize partition-key columns to the
-    end — a no-op for uniform tables.
+    end; uniform tables already read in that order, and then no
+    reordering ``select`` is built (its ~100 JVM calls were most of a
+    build's driver round trips).
 
     ADDITIVE schema evolution (the Iceberg add-column shape): commits
     may carry columns earlier commits lack — the union back-fills NULL
@@ -2740,8 +2727,12 @@ def _read_dirs_raw_build(
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
     if pcols:
-        data_cols = [c for c in out.columns if c not in pcols]
-        out = out.select(*data_cols, *[c for c in pcols if c in out.columns])
+        cols = out.columns
+        canonical = [c for c in cols if c not in pcols] + [
+            c for c in pcols if c in cols
+        ]
+        if canonical != cols:  # a select costs ~100 JVM calls to build
+            out = out.select(*canonical)
     # partition-column renames are a metadata fold (pcol_log): the scan
     # reconstructs the PHYSICAL path name, this alias exposes the
     # version's logical name — Catalyst pushes logical-name filters
@@ -3564,20 +3555,18 @@ def _resolve_tag(spark: SparkSession, table: str, name: str) -> int | None:
     snapshot markers: a re-tag WRITES a fresh ``r<K+1>.json`` (atomic
     create — a reader never observes a missing-file window, unlike
     delete-then-rename) and then best-effort prunes older refs."""
-    fs, jvm = _fs(spark, table)
-    d = jvm.org.apache.hadoop.fs.Path(_tag_dir(table, name))
-    if not fs.exists(d):
-        return None
-    best = None
-    for st in fs.listStatus(d):
-        m = _TAG_REF_RE.match(st.getPath().getName())
-        if not m:
-            continue
-        if best is None or int(m.group(1)) > best[0]:
-            txt = _read_text(spark, st.getPath().toString())
-            if txt is not None:
-                best = (int(m.group(1)), json.loads(txt)["version"])
-    return None if best is None else best[1]
+    d = _tag_dir(table, name)
+    for ref in sorted(_tag_refs(spark, d), reverse=True):
+        txt = _read_text(spark, f"{d}/r{ref:05d}.json")
+        if txt is not None:
+            return json.loads(txt)["version"]
+    return None
+
+
+def _tag_refs(spark: SparkSession, tag_dir: str) -> list[int]:
+    """The ref numbers under a tag's dir (``[]`` when it is absent)."""
+    refs = map(_TAG_REF_RE.match, _glob(spark, tag_dir, "r*.json"))
+    return [int(m.group(1)) for m in refs if m]
 
 
 def snapshot_tag(
@@ -3605,39 +3594,22 @@ def snapshot_tag(
     if v < 1:
         raise ValueError(f"snapshot table {table} has no committed version")
     _load_manifest(spark, table, v, committed=committed)  # raises if gone
-    fs, jvm = _fs(spark, table)
-    d = jvm.org.apache.hadoop.fs.Path(_tag_dir(table, name))
-    ref = 0
-    if fs.exists(d):
-        for st in fs.listStatus(d):
-            m = _TAG_REF_RE.match(st.getPath().getName())
-            if m:
-                ref = max(ref, int(m.group(1)))
-    _create_atomic(
-        spark,
-        f"{_tag_dir(table, name)}/r{ref + 1:05d}.json",
-        json.dumps({"version": v}),
-    )
+    d = _tag_dir(table, name)
+    refs = _tag_refs(spark, d)
+    ref = max(refs, default=0)
+    _create_atomic(spark, f"{d}/r{ref + 1:05d}.json", json.dumps({"version": v}))
     # best-effort prune of superseded refs (a crash here leaves extras —
     # harmless, highest wins)
-    for st in fs.listStatus(d):
-        m = _TAG_REF_RE.match(st.getPath().getName())
-        if m and int(m.group(1)) <= ref:
-            fs.delete(st.getPath(), False)
+    for old in refs:
+        fs, hold = _fs_path(spark, f"{d}/r{old:05d}.json")
+        fs.delete(hold, False)
     return v
 
 
 def snapshot_tags(spark: SparkSession, table: str) -> dict[str, int]:
     """All tags: ``{name: version}`` (empty when none)."""
-    fs, jvm = _fs(spark, table)
-    tags_dir = jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}/tags")
-    if not fs.exists(tags_dir):
-        return {}
     out: dict[str, int] = {}
-    for st in fs.listStatus(tags_dir):
-        if not st.isDirectory():
-            continue
-        name = st.getPath().getName()
+    for name in _glob(spark, f"{table}/{_SNAP_DIR}/tags", "*"):
         v = _resolve_tag(spark, table, name)
         if v is not None:
             out[name] = v
@@ -3647,8 +3619,8 @@ def snapshot_tags(spark: SparkSession, table: str) -> dict[str, int]:
 def snapshot_drop_tag(spark: SparkSession, table: str, name: str) -> bool:
     """Remove a tag; returns whether it existed. The next
     :func:`snapshot_expire` can then reclaim the version it pinned."""
-    fs, jvm = _fs(spark, table)
-    return fs.delete(jvm.org.apache.hadoop.fs.Path(_tag_dir(table, name)), True)
+    fs, d = _fs_path(spark, _tag_dir(table, name))
+    return fs.delete(d, True)
 
 
 # ---------------------------------------------------------------------------
@@ -3690,8 +3662,8 @@ def snapshot_branch(
             spark, _branch_meta_path(table, name), json.dumps({"from_version": v})
         )
     except IOError:
-        fs, jvm = _fs(spark, table)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(_branch_meta_path(table, name))):
+        fs, bmeta = _fs_path(spark, _branch_meta_path(table, name))
+        if fs.exists(bmeta):
             raise ValueError(f"branch {name!r} already exists on {table}")
         raise
     return v
@@ -3699,15 +3671,8 @@ def snapshot_branch(
 
 def snapshot_branches(spark: SparkSession, table: str) -> dict[str, dict]:
     """All branches: ``{name: {"from_version": fork, "head": head}}``."""
-    fs, jvm = _fs(spark, table)
-    bdir = jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}/branches")
-    if not fs.exists(bdir):
-        return {}
     out: dict[str, dict] = {}
-    for st in fs.listStatus(bdir):
-        fname = st.getPath().getName()
-        if not fname.endswith(".json"):
-            continue
+    for fname in _glob(spark, f"{table}/{_SNAP_DIR}/branches", "*.json"):
         name = fname[: -len(".json")]
         meta = _branch_meta(spark, table, name)
         if meta is not None:
@@ -3724,16 +3689,13 @@ def snapshot_drop_branch(spark: SparkSession, table: str, name: str) -> bool:
     reclaims their manifests and data dirs). Returns whether the branch
     existed. Dropping after a fast-forward is safe — the published
     versions are owned by main's markers from then on."""
-    fs, jvm = _fs(spark, table)
-    existed = fs.delete(
-        jvm.org.apache.hadoop.fs.Path(_branch_meta_path(table, name)), False
-    )
-    for st in fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}/ref-{name}-*")
-    ) or []:
-        tail = st.getPath().getName()[len(f"ref-{name}-"):]
+    fs, bmeta = _fs_path(spark, _branch_meta_path(table, name))
+    existed = fs.delete(bmeta, False)
+    prefix = f"ref-{name}-"
+    for marker in _glob(spark, f"{table}/{_SNAP_DIR}", f"{_glob_escape(prefix)}*"):
+        tail = marker[len(prefix):]
         if tail.isdigit():
-            fs.delete(st.getPath(), False)
+            fs.delete(_fs_path(spark, f"{table}/{_SNAP_DIR}/{marker}")[1], False)
             _RESOLVE_CACHE.pop((table, f"b:{name}:{int(tail)}"), None)
     return existed
 
@@ -3851,7 +3813,8 @@ def snapshot_expire(
             _resolve_manifest_file(spark, table, bv, branch=bname).rsplit("/", 1)[1]
         )
         _retain(_load_root(spark, table, bv, committed=bv, branch=bname))
-    fs, jvm = _fs(spark, table)
+    fs, _ = _fs_path(spark, table)
+    hpath = _jclass(spark, "org.apache.hadoop.fs.Path")
     n_manifests = 0
     latest = max(existing)
     for s in history:
@@ -3859,12 +3822,12 @@ def snapshot_expire(
             v = s["version"]
             mf_path = _resolve_manifest_file(spark, table, v)
             if mf_path.rsplit("/", 1)[1] not in referenced:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(mf_path), False)
+                fs.delete(hpath(mf_path), False)
             # the version's marker goes with its manifest (it is the
             # version→file map entry); the LATEST marker is the live
             # pointer and is always retained
             if v != latest:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(_marker_path(table, v)), False)
+                fs.delete(hpath(_marker_path(table, v)), False)
             _RESOLVE_CACHE.pop((table, v), None)
             n_manifests += 1
     # vacuum phantom token manifests: a committed version's manifest is
@@ -3877,7 +3840,6 @@ def snapshot_expire(
     # signal, so they are vacuumed only here, at the maintenance
     # writer's quiesce point (the same single-writer contract that
     # makes data-dir orphan cleanup safe below).
-    snap_dir = jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}")
     committed_names = (
         {
             _resolve_manifest_file(spark, table, v).rsplit("/", 1)[1]
@@ -3886,20 +3848,20 @@ def snapshot_expire(
         | referenced
         | branch_root_names
     )
-    for st in fs.listStatus(snap_dir):
-        name = st.getPath().getName()
+    snap = f"{table}/{_SNAP_DIR}"
+    for name in _glob(spark, snap, "*"):
         mf = _MANIFEST_FILE_RE.match(name)
         if (
             mf
             and int(mf.group(1)) <= latest
             and name not in committed_names
         ):
-            fs.delete(st.getPath(), False)
+            fs.delete(hpath(f"{snap}/{name}"), False)
         elif _CFILE_RE.match(name) and name not in referenced:
-            fs.delete(st.getPath(), False)
-            _CFILE_CACHE.pop(f"{table}/{_SNAP_DIR}/{name}", None)
+            fs.delete(hpath(f"{snap}/{name}"), False)
+            _CFILE_CACHE.pop(f"{snap}/{name}", None)
     n_dirs = 0
-    data_root = jvm.org.apache.hadoop.fs.Path(f"{table}/data")
+    data_root = hpath(f"{table}/data")
     if fs.exists(data_root):
         for st in fs.listStatus(data_root):
             name = st.getPath().getName()
@@ -3908,7 +3870,7 @@ def snapshot_expire(
                 n_dirs += 1
     # merge-on-read delete files expire with their last referencing root
     n_del = 0
-    del_root = jvm.org.apache.hadoop.fs.Path(f"{table}/deletes")
+    del_root = hpath(f"{table}/deletes")
     if fs.exists(del_root):
         for st in fs.listStatus(del_root):
             name = st.getPath().getName()
@@ -3966,8 +3928,8 @@ def snapshot_rewrite(
 
 def is_snapshot_table(spark: SparkSession, table: str) -> bool:
     """True iff ``table`` carries snapshot metadata (``_snapshots/``)."""
-    fs, jvm = _fs(spark, table)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{table}/{_SNAP_DIR}"))
+    fs, snap = _fs_path(spark, f"{table}/{_SNAP_DIR}")
+    return fs.exists(snap)
 
 
 def snapshot_overwrite_all(

@@ -169,7 +169,9 @@ def get_spark(
         # sidecar concept — skip them for the local scheme. Applied on
         # the JVM-cached FileSystem instance so every write/read in
         # this JVM inherits it; harmless no-op if unavailable.
-        lfs = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        from .operators.metafile import _jclass
+
+        lfs = _jclass(spark, "org.apache.hadoop.fs.FileSystem").getLocal(
             spark.sparkContext._jsc.hadoopConfiguration()
         )
         lfs.setWriteChecksum(False)

@@ -573,8 +573,10 @@ def jvm_from_avro_available(spark) -> bool:
     app = spark.sparkContext.applicationId
     found = _JVM_AVRO_BY_APP.get(app)
     if found is None:
+        from ..operators.metafile import _jclass
+
         try:
-            spark._jvm.org.apache.spark.util.Utils.classForName(
+            _jclass(spark, "org.apache.spark.util.Utils").classForName(
                 "org.apache.spark.sql.avro.AvroDataToCatalyst", True, True
             )
             found = True

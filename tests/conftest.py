@@ -34,3 +34,25 @@ def jobs_in(spark, fn) -> int:
     before = dag.numTotalJobs()
     fn()
     return dag.numTotalJobs() - before
+
+
+def py4j_commands(spark, fn) -> list[str]:
+    """The py4j commands the driver sends to the JVM while ``fn`` runs, on
+    any thread, leaving out py4j's garbage-collection deletes
+    (``m\\nd\\n``): those go out whenever Python happens to collect a
+    proxy, not when the code under test calls the JVM."""
+    client = spark._jvm._gateway_client
+    sent: list[str] = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return sent

@@ -11,6 +11,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import re
 import uuid
 
 import numpy as np
@@ -18,6 +19,14 @@ import pytest
 
 from lambda_kafka_to_s3_parquet_spark.operators import dedup as dd
 from lambda_kafka_to_s3_parquet_spark.operators import metafile as mf
+from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
+    current_version,
+    is_snapshot_table,
+    snapshot_append,
+    snapshot_read,
+)
+
+from .conftest import py4j_commands
 
 PACKAGE = pathlib.Path(mf.__file__).resolve().parents[1]
 
@@ -170,11 +179,15 @@ def test_metadata_file_io_has_one_implementation():
     """Small-file reads, stream creates and FS renames live only in
     ``operators/metafile.py``; the band store's rebucket directory swap
     is the one other FS rename. ``os.rename`` (local staged replays in
-    ``plans/``) is a separate mechanism and not scanned here."""
+    ``plans/``) is a separate mechanism and not scanned here. No module
+    walks ``spark._jvm`` to a class package by package (one py4j round
+    trip per level, every time): JVM classes come from ``_jclass``."""
     strays = []
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
         src = path.read_text()
+        if re.search(r"jvm\.(org|com|java|scala)\.", src):
+            strays.append((rel, "jvm package walk"))
         if rel == "operators/metafile.py":
             continue
         if "_marker_fs" in src or "_zone_maps" in src:
@@ -189,3 +202,54 @@ def test_metadata_file_io_has_one_implementation():
                     continue
                 strays.append((rel, fn, attr))
     assert strays == []
+
+
+def test_glob_reads_a_literal_dir_in_a_fixed_number_of_calls(spark, tmp_path):
+    """``_glob`` matches its dir literally (metacharacters, commas) and
+    names every match in a fixed number of JVM calls, however many
+    match; an escaped pattern matches the name it spells."""
+    mf._glob(spark, str(tmp_path), "*")  # resolves the static members once
+    calls = set()
+    for name, n in (("a[1]", 2), ("b{x,y}", 3), ("c*?", 30), ("d,e", 1)):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "other").mkdir()
+        want = [f"k=1,{i}" for i in range(n)]
+        for sub in want:
+            (d / sub).mkdir()
+        got = []
+        sent = py4j_commands(spark, lambda: got.extend(mf._glob(spark, str(d), "k=*")))
+        assert sorted(got) == sorted(want)
+        calls.add(len(sent))
+    assert len(calls) == 1 and calls.pop() <= 8
+    (tmp_path / "a[1]" / "m[0]").mkdir()
+    assert mf._glob(spark, str(tmp_path / "a[1]"), mf._glob_escape("m[0]")) == ["m[0]"]
+    assert mf._glob(spark, str(tmp_path / "absent"), "*") == []
+
+
+def _table_of(spark, path: str, commits: int) -> str:
+    for i in range(commits):
+        snapshot_append(spark, path, spark.createDataFrame([(i,)], "id long"))
+    return path
+
+
+def test_snapshot_metadata_round_trips_do_not_grow_with_history(spark, tmp_path):
+    """The driver's py4j round trips for the version lookup and for a
+    read whose frame is memoized are the same on a 5-commit table as on
+    a 40-commit table: the metadata plane costs a fixed number of JVM
+    calls, not a few per retained version. ``is_snapshot_table`` is one
+    existence probe."""
+    small = _table_of(spark, str(tmp_path / "small"), 5)
+    large = _table_of(spark, str(tmp_path / "large"), 40)
+
+    def costs(table):
+        snapshot_read(spark, table)  # builds and memoizes the frame
+        version = len(py4j_commands(spark, lambda: current_version(spark, table)))
+        read = len(py4j_commands(spark, lambda: snapshot_read(spark, table)))
+        return version, read
+
+    assert costs(small) == costs(large)
+    version, read = costs(large)
+    assert version <= 8 and read <= 16, (version, read)
+    for table in (large, str(tmp_path / "absent")):
+        assert len(py4j_commands(spark, lambda: is_snapshot_table(spark, table))) <= 4

@@ -366,6 +366,26 @@ def test_table_path_containing_data_segment(spark, tmp_path):
     assert _rows(snapshot_read(spark, table)) == [(2, 2, "a")]
 
 
+@pytest.mark.parametrize("name", ["br[1]", "cur{a}"])
+def test_table_path_with_glob_metacharacters(spark, tmp_path, name):
+    """A table path holding ``[`` or ``{`` is a literal path, never a
+    glob: the version lookup sees every marker (it read v0 and the second
+    append lost the version CAS until it gave up), the commit finds its
+    partition dirs, and the scans read the dirs they name."""
+    table = str(tmp_path / name)
+    for i in (1, 2):
+        df = spark.createDataFrame(
+            [(i, "a", 10 * i), (i + 10, "b", 20 * i)], "id long, p string, v long"
+        )
+        assert snapshot_append(
+            spark, table, df, ["p"], stats_cols=["v"], bloom_cols=["id"]
+        ) == i
+    assert current_version(spark, table) == 2
+    assert snapshot_read(spark, table).count() == 4
+    hit = snapshot_read(spark, table, skip_keys=[("id", [12])])
+    assert _rows(hit.filter(F.col("id") == 12)) == [(12, 40, "b")]
+
+
 def test_cdc_stream_snapshot_protocol_equals_batch_latest(spark, sf_dir, tmp_path):
     """run_cdc_merge_stream(commit_protocol='snapshot'): the manifest-
     committed current-state table equals batch latest-per-key."""
@@ -842,13 +862,7 @@ def test_racing_appenders_both_commit(spark, table, monkeypatch):
     ]
     # the loser's losing-attempt manifest was deleted: exactly one
     # committed manifest per version remains
-    fs, jvm = snap._fs(spark, table)
-    names = [
-        st.getPath().getName()
-        for st in fs.listStatus(
-            jvm.org.apache.hadoop.fs.Path(f"{table}/_snapshots")
-        )
-    ]
+    names = snap._glob(spark, f"{table}/_snapshots", "*")
     manifests = [n for n in names if snap._MANIFEST_FILE_RE.match(n)]
     assert len(manifests) == 3
 
